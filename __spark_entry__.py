@@ -1025,9 +1025,9 @@ _BATCH_QUERIES = {"qa": Q_BM25, "qb": Q_LNN, "qc": Q_LM, "qd": Q_WAND}
 
 
 def _q_bm25_wand_batch(spark, sf_dir):
-    """Many queries through the batch WAND path — TWO Spark jobs for the
-    whole set (metadata + cogroup), blocks decoded once per bucket across
-    queries; rank/score-identical to per-query BM25 (the oracle below)."""
+    """Many queries through the batch WAND path — FOUR Spark jobs for the
+    whole set (two-job metadata fill + two-job scoring pass), blocks
+    decoded once per bucket across queries; rank/score-identical to per-query BM25 (the oracle below)."""
     from fulltextsearchengine_spark.operators.wand import bm25_topk_wand_batch
 
     blocks, slabs, st = _wand_tables(spark, sf_dir)
@@ -1779,7 +1779,7 @@ def _q_purge_terms(spark, sf_dir):
 def _q_bm25_wand_tombstoned(spark, sf_dir):
     """Tombstone-aware WAND (VERDICT r3 #5): the SAME conv takedown as
     ftse_delete_search, applied on the fast path — deleted docs are
-    excluded from θ-seeding and masked in the cogroup; stats stay
+    excluded from θ-seeding and masked in the scoring kernel; stats stay
     pre-delete. Oracle: identical SQL to ftse_delete_search, so the
     fast path and the DataFrame anti-join path are pinned to one
     semantics."""

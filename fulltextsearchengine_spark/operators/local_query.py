@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .posting_blocks import decode_block
 from .wand import BM25_B, BM25_K1, bm25_topk_wand_blockmax, topk_select
 
 _BLOCK_COLS = [
@@ -99,7 +100,8 @@ class LocalBM25:
         # re-seeks its HDD per query; we pay decode once per term)
         self._decoded: dict[str, dict[int, tuple[np.ndarray, np.ndarray, float]]] = {}
 
-    def _fetch_blocks(self, terms: list[str]) -> pd.DataFrame:
+    def _load(self, terms: list[str]) -> None:
+        """Fetch every uncached term's blocks in one Spark job."""
         missing = [t for t in terms if t not in self._cache]
         if missing:
             pdf = (
@@ -111,6 +113,9 @@ class LocalBM25:
                 self._cache[t] = grp
             for t in missing:
                 self._cache.setdefault(t, pd.DataFrame(columns=_BLOCK_COLS))
+
+    def _fetch_blocks(self, terms: list[str]) -> pd.DataFrame:
+        self._load(terms)
         frames = [self._cache[t] for t in terms if len(self._cache[t])]
         if not frames:
             return pd.DataFrame(columns=_BLOCK_COLS)
@@ -119,14 +124,10 @@ class LocalBM25:
     def _decoded_term(self, term: str) -> dict[int, tuple[np.ndarray, np.ndarray, float]]:
         if term in self._decoded:
             return self._decoded[term]
-        from ..codecs import svb_decode, tf_decode
-
         out: dict[int, list] = {}
         pdf = self._fetch_blocks([term])
         for row in pdf.itertuples(index=False):
-            gaps = svb_decode(row.gaps_ctrl, row.gaps_data, row.n).astype(np.int64)
-            ids = np.cumsum(gaps) + (int(row.first_doc_id) - 1)
-            tfs = tf_decode(row.tfs_ctrl, row.tfs_data, row.n).astype(np.float64)
+            ids, tfs = decode_block(row)
             out.setdefault(int(row.bucket), []).append((ids, tfs, float(row.max_impact)))
         dec: dict[int, tuple] = {}
         for bkt, parts in out.items():
@@ -173,6 +174,7 @@ class LocalBM25:
         idf = {t: w for t in terms if (w := self.idf(t)) is not None}
         if not idf:
             return []
+        self._load([t for t in sorted(idf) if t not in self._decoded])
         dec = {t: self._decoded_term(t) for t in sorted(idf)}
         # process buckets in DESCENDING upper-bound order: the heap
         # fills with high scores first, so later low-ub buckets skip —
@@ -185,8 +187,13 @@ class LocalBM25:
         heap: list[tuple[float, int]] = []
         span = self.bucket_range
         for bkt in sorted(ubs, key=lambda b_: -ubs[b_]):
-            if len(heap) >= k and ubs[bkt] <= heap[0][0]:
-                break  # block-max skip; ubs descending → all the rest skip too
+            # block-max skip; ubs descending → all the rest skip too. Only
+            # a bound strictly below the k-th score (minus WAND's 1e-9
+            # relative slack for float-order noise) may stop the scan: a
+            # bucket whose bound ties that score can hold a tied doc with
+            # a smaller doc_id, which outranks the heap's k-th
+            if len(heap) >= k and ubs[bkt] < heap[0][0] - abs(heap[0][0]) * 1e-9:
+                break
             parts = [(t, *d[bkt]) for t, d in sorted(dec.items()) if bkt in d]
             base = bkt * span + 1
             acc = np.zeros(span, dtype=np.float64)

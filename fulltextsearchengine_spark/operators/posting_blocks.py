@@ -221,13 +221,14 @@ def build_doc_len_slabs(docs: DataFrame, bucket_range: int) -> DataFrame:
 
 
 def decode_block(row) -> tuple[np.ndarray, np.ndarray]:
-    """(doc_ids, tfs) from one block row — branch-free numpy decode
-    (PostingListReader.java:63-67 cumsum analog)."""
-    n = row["n"]
-    gaps = svb_decode(row["gaps_ctrl"], row["gaps_data"], n)
-    doc_ids = np.cumsum(gaps.astype(np.int64)) + (int(row["first_doc_id"]) - 1)
-    tfs = tf_decode(row["tfs_ctrl"], row["tfs_data"], n)
-    return doc_ids, tfs
+    """(absolute doc_ids int64, tfs) from one block — a Row or an
+    ``itertuples`` row with n, first_doc_id and the four payload fields;
+    branch-free numpy decode (PostingListReader.java:63-67 cumsum
+    analog)."""
+    n = int(row.n)  # a float where a union with slab rows made the column nullable
+    gaps = svb_decode(row.gaps_ctrl, row.gaps_data, n)
+    doc_ids = np.cumsum(gaps.astype(np.int64)) + (int(row.first_doc_id) - 1)
+    return doc_ids, tf_decode(row.tfs_ctrl, row.tfs_data, n)
 
 
 def blocks_to_postings(blocks: DataFrame) -> DataFrame:
@@ -238,9 +239,7 @@ def blocks_to_postings(blocks: DataFrame) -> DataFrame:
         for pdf in batches:
             terms, ids, tfs = [], [], []
             for row in pdf.itertuples(index=False):
-                gaps = svb_decode(row.gaps_ctrl, row.gaps_data, row.n)
-                d = np.cumsum(gaps.astype(np.int64)) + (int(row.first_doc_id) - 1)
-                t = tf_decode(row.tfs_ctrl, row.tfs_data, row.n)
+                d, t = decode_block(row)
                 terms.extend([row.term] * len(d))
                 ids.append(d)
                 tfs.append(t)

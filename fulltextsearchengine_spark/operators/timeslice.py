@@ -23,12 +23,19 @@ and Spark pushes BETWEEN on partition values natively.
 
 from __future__ import annotations
 
+import json
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from .. import hadoopfs
 from .index_build import InvertedIndex
 from .search import Searcher
 
+# table directory -> TimeSlicedIndex attribute
+_TABLES = {"postings_by_slice": "postings", "terms": "terms", "stats": "stats"}
 _SLICE_FMT = {"month": "yyyy-MM", "day": "yyyy-MM-dd", "hour": "yyyy-MM-dd HH"}
 
 
@@ -47,9 +54,12 @@ class TimeSlicedIndex:
         self.spark = spark
         self.path = path
         self.granularity = meta["granularity"]
-        self.postings = spark.read.parquet(f"{path}/postings_by_slice")
-        self.terms = spark.read.parquet(f"{path}/terms")
-        self.stats = spark.read.parquet(f"{path}/stats")
+        schemas = meta.get("schemas") or {}
+        for table, attr in _TABLES.items():
+            reader = spark.read
+            if table in schemas:
+                reader = reader.schema(T.StructType.fromJson(schemas[table]))
+            setattr(self, attr, reader.parquet(f"{path}/{table}"))
 
     # (doc_id, ts) is 16 packed bytes/row: 10M docs ≈ 160 MB — inside a
     # comfortable executor broadcast budget. Beyond it (a 10^12-turn
@@ -112,52 +122,43 @@ class TimeSlicedIndex:
         index.terms.write.mode("overwrite").parquet(f"{path}/terms")
         index.stats.write.mode("overwrite").parquet(f"{path}/stats")
         spark = index.postings.sparkSession
-        meta = {"granularity": granularity}
+        tsi = cls(spark, path, {"granularity": granularity})
+        # the read-back schemas let load() skip parquet schema inference,
+        # which costs one Spark job per table
+        meta = {
+            "granularity": granularity,
+            "schemas": {t: getattr(tsi, a).schema.jsonValue() for t, a in _TABLES.items()},
+        }
         # meta goes through the SAME filesystem abstraction as the
         # tables (ADVICE r3): a local open() would break for HDFS/S3
         # paths the parquet writers above accept. But not through a
         # Spark JOB — a one-row createDataFrame().write.json() measured
         # 4-5 s of pure scheduling/Arrow overhead (over half the whole
-        # sf0.1 build); the Hadoop FileSystem API writes the same byte
-        # stream to the same URI schemes with no job.
-        import json as _json
-
+        # sf0.1 build). The directory is cleared first: a rebuild over an
+        # index written by the old DataFrame writer must not leave its
+        # part-*.json beside meta.json.
+        meta_dir = f"{path}/_timeslice_meta"
         try:
-            jvm = spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(
-                f"{path}/_timeslice_meta/meta.json"
-            )
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            out = fs.create(jpath, True)
-            out.write(bytearray(_json.dumps(meta).encode("utf-8")))
-            out.close()
-        except Exception:  # pragma: no cover - non-py4j runtimes
+            hadoopfs.delete(spark, meta_dir)
+            hadoopfs.write_bytes(spark, f"{meta_dir}/meta.json", json.dumps(meta).encode("utf-8"))
+        except Py4JError:
             spark.createDataFrame(
                 [(granularity,)], "granularity string"
-            ).coalesce(1).write.mode("overwrite").json(f"{path}/_timeslice_meta")
-        return cls(spark, path, meta)
+            ).coalesce(1).write.mode("overwrite").json(meta_dir)
+        return tsi
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "TimeSlicedIndex":
-        import json as _json
-
-        try:  # same no-job FS read as build's meta write
-            jvm = spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(
-                f"{path}/_timeslice_meta/meta.json"
-            )
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            if fs.exists(jpath):
-                stream = fs.open(jpath)
-                n = fs.getFileStatus(jpath).getLen()
-                buf = bytearray(int(n))
-                stream.readFully(0, buf)
-                stream.close()
-                meta = _json.loads(bytes(buf).decode("utf-8"))
-            else:  # index written by the pre-r5 DataFrame meta writer
-                meta = spark.read.json(f"{path}/_timeslice_meta").first().asDict()
-        except Exception:  # pragma: no cover - non-py4j runtimes
-            meta = spark.read.json(f"{path}/_timeslice_meta").first().asDict()
+        """Open a built index; reads meta.json with no Spark job."""
+        meta_dir = f"{path}/_timeslice_meta"
+        try:
+            raw = hadoopfs.read_bytes(spark, f"{meta_dir}/meta.json")
+        except Py4JError:
+            raw = None
+        if raw is not None:
+            meta = json.loads(raw.decode("utf-8"))
+        else:  # index written by the older DataFrame meta writer
+            meta = spark.read.json(meta_dir).first().asDict()
         return cls(spark, path, meta)
 
     def searcher_for_range(self, ts_from: str, ts_to: str) -> Searcher:

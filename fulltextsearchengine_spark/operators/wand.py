@@ -3,30 +3,46 @@ performance query path (north_star: "BM25 top-k via posting-list
 traversal with block-max pruning and a bounded min-heap inside
 mapPartitions").
 
-Distributed pruning design (round 2 — replaces the unpruned r1 path):
+One planner serves every entry point. ``WandSearcher`` keeps a per-term
+metadata cache on the driver; a cold ``bm25_topk_wand`` is a
+``WandSearcher`` with an empty cache, and a single query is a batch of
+one, so ``bm25_topk_wand``, ``bm25_topk_wand_batch`` and
+``WandSearcher.search`` all run the same three steps:
 
   0. BUILD TIME: ``build_doc_len_slabs`` (posting_blocks.py) packs the
      docs table into one uint32 doc_len array per doc_id bucket. Queries
-     never touch the docs table again — no per-query corpus shuffle.
-  1. THRESHOLD SEED: decode the ``seed_blocks`` highest idf·max_impact
-     blocks (a driver-side numpy pass over a few KB), sum per-doc
-     contributions; the k-th best distinct partial sum is a valid lower
-     bound on the true k-th best total (BM25 contributions are
-     non-negative), nudged down a few ulps so float-order noise can
-     never over-prune. Broadcast as a static threshold θ.
-  2. BUCKET SKIP (Catalyst, metadata only): ub(bucket) =
-     Σ_t idf_t · max(max_impact of t's blocks in bucket); buckets with
-     ub < θ are dropped BEFORE their binary columns ever move — the
-     cogroup shuffles only surviving buckets' blocks + slab rows.
-  3. CHUNK SKIP (in-task): inside a surviving bucket, per-chunk upper
-     bounds (chunk = block_size doc_ids) gate each block's decode; a
-     block is decoded only if some chunk it overlaps could beat θ.
-     Survivors decode via branch-free Stream-VByte numpy and accumulate
-     with np.add.at on a dense bucket slab, in sorted-term order (float
-     adds match the oracle's order for every fully-scored doc).
-  4. Bounded per-bucket top-k (np.argpartition analog of the reference's
+     never touch the docs table — no per-query corpus shuffle.
+  1. FILL (only for terms not yet cached; two Spark jobs, no exchange):
+     job 1 scans just the metadata columns (term, bucket, block_id, n,
+     max_impact, first_doc_id) of the missing terms; from those rows
+     the driver derives df, per-(term, bucket) max impact and block
+     count, and each term's ``seed_blocks`` highest-impact block ids
+     (within a term idf is constant, so impact ORDER needs no weights —
+     what makes the cache query-independent). Job 2 is one union scan
+     of those seed blocks' payload plus the seed buckets' doc_len slabs
+     not cached yet.
+  2. THRESHOLD SEED + BUCKET SKIP (driver, no job): the query's global
+     top ``seed_blocks`` blocks by idf·max_impact (a subset of the
+     per-term pools) are summed per doc in sorted-term order; the k-th
+     best partial sum is a lower bound on the true k-th best total
+     (BM25 contributions are non-negative), nudged down by 1e-9
+     relative so float-order noise never over-prunes. Buckets with
+     ub = Σ_t idf_t · max(max_impact of t's blocks in the bucket) < θ
+     are dropped before their binary columns ever move.
+  3. SCORE (two Spark jobs under AQE: one exchange): surviving buckets'
+     blocks ∪ their slab rows, one ``groupBy("bucket").applyInPandas``.
+     Inside a bucket, per-chunk upper bounds (chunk = block_size
+     doc_ids) gate each block's decode; a block decodes at most once
+     however many queries of the batch share its term, and accumulates
+     with a dense scatter per query in sorted-term order (float adds
+     match the oracle's order for every fully-scored doc). Bounded
+     per-bucket top-k (np.argpartition analog of the reference's
      bounded min-heap), then a driver k-merge with the exact tie-break
      (score desc, doc_id asc — ReviewSearch.java:98-101).
+
+A query over cached terms costs the two scoring jobs; a query with new
+terms (and every cold ``bm25_topk_wand`` or ``bm25_topk_wand_batch``
+call) costs four. ``tests/test_wand_jobs.py`` asserts these counts.
 
 Safety argument for skipping: ub bounds the TOTAL score of every doc in
 the skipped range, so a doc with total ≥ θ (hence every true top-k doc,
@@ -40,18 +56,29 @@ from __future__ import annotations
 
 import heapq
 import math
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..codecs import svb_decode, tf_decode
+from .posting_blocks import decode_block
 
 BM25_K1 = 1.2
 BM25_B = 0.75
 
-_EMPTY = {"doc_id": "int64", "score": "float64"}
+_META_COLS = ["term", "bucket", "block_id", "n", "max_impact", "first_doc_id"]
+_KERNEL_COLS = [
+    "term", "bucket", "n", "first_doc_id", "last_doc_id", "max_impact",
+    "gaps_ctrl", "gaps_data", "tfs_ctrl", "tfs_data",
+]
+_SLAB_COLS = ["bucket", "base", "lens"]
+_OUT_SCHEMA = T.StructType([
+    T.StructField("q", T.LongType()),
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("score", T.DoubleType()),
+])
 
 
 def topk_select(cand: np.ndarray, scores: np.ndarray, k: int):
@@ -75,6 +102,21 @@ def _contrib(w: float, tfs: np.ndarray, dl: np.ndarray, avgdl: float, k1: float,
     return w * tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dl / avgdl))
 
 
+def _idf(n_docs: int, df: int) -> float:
+    return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+
+
+def _sql(v) -> str:
+    """A SQL literal: bigint for integers, an escaped string otherwise."""
+    if isinstance(v, (int, np.integer)):
+        return f"{int(v)}L"
+    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_in(col: str, values) -> str:
+    return f"{col} IN ({','.join(map(_sql, values))})"
+
+
 def _norm_weights(weights, terms) -> dict[str, float]:
     """Validate/normalize a query-boost map: lowercase keys, every key
     must be a query term, every weight > 0. Empty dict = unweighted."""
@@ -90,11 +132,20 @@ def _norm_weights(weights, terms) -> dict[str, float]:
     return out
 
 
+def _query_terms(query: list[str], msm: int, qid=None) -> list[str]:
+    """Sorted distinct lowercase terms; rejects an unsatisfiable m."""
+    terms = sorted({t.lower() for t in query})
+    if not 1 <= msm <= max(len(terms), 1):
+        label = f"query terms {terms}" if qid is None else f"query {qid!r}"
+        raise ValueError(f"min_should_match {msm} out of [1, {len(terms)}] for {label}")
+    return terms
+
+
 def _tomb_array(tombstones) -> np.ndarray | None:
     """Normalize a tombstone spec (None | iterable of doc_ids | a
     DataFrame with a doc_id column) to a sorted int64 numpy array.
     Tombstone sets are takedown-sized (deletes.py scale note) — the
-    array ships to executors inside the cogroup closure, the fast-path
+    array ships to executors inside the kernel closure, the fast-path
     analog of the broadcast anti-join in deletes.exclude_docs."""
     if tombstones is None:
         return None
@@ -105,6 +156,426 @@ def _tomb_array(tombstones) -> np.ndarray | None:
     if not ids:
         return None
     return np.unique(np.asarray(ids, dtype=np.int64))
+
+
+def _zero_stats():
+    return {
+        "buckets_total": 0,
+        "buckets_pruned": 0,
+        "blocks_total": 0,
+        "blocks_in_pruned_buckets": 0,
+        "blocks_decoded": 0,
+        "blocks_chunk_skipped": 0,
+        "threshold": -math.inf,
+    }
+
+
+class _Seed(NamedTuple):
+    max_impact: float
+    block_id: int
+    ids: np.ndarray  # absolute doc_ids
+    tfs: np.ndarray
+    dl: np.ndarray  # doc lengths of ids
+
+
+class _TermMeta(NamedTuple):
+    df: int
+    buckets: np.ndarray  # sorted buckets holding ≥1 block of the term
+    mi: np.ndarray  # max max_impact per bucket
+    nb: np.ndarray  # block count per bucket
+    seeds: list  # _Seed, by (max_impact desc, block_id asc)
+
+
+class _Plan(NamedTuple):
+    w: dict  # term -> idf·boost, sorted terms with df > 0
+    theta: float
+    msm: int
+    surviving: np.ndarray  # buckets with ub ≥ θ
+    stats: dict
+
+
+def _seed_theta(w, seeds_of, k, msm, tomb, seed_blocks, avgdl, k1, b) -> float:
+    """θ for one query: the k-th best partial score over the query's
+    ``seed_blocks`` highest w·max_impact blocks (ties by term, block_id),
+    added in sorted-term order, minus 1e-9 relative slack. It is a valid
+    lower bound on the k-th best live, m-matching score: contributions
+    are non-negative; a doc's observed match count is ≤ its true count,
+    so every doc kept for ``msm`` is truly valid; tombstoned docs are
+    dropped; and dropping docs only weakens θ."""
+    pool = sorted(
+        ((-(wt * s.max_impact), t, s.block_id, s) for t, wt in w.items() for s in seeds_of(t)),
+        key=lambda x: x[:3],
+    )[:seed_blocks]
+    if not pool:
+        return -math.inf
+    pool.sort(key=lambda x: x[1])  # stable: sorted-term add order
+    ids = np.concatenate([s.ids for *_, s in pool])
+    contrib = np.concatenate([_contrib(w[t], s.tfs, s.dl, avgdl, k1, b) for _, t, _, s in pool])
+    uniq, inv = np.unique(ids, return_inverse=True)
+    acc = np.zeros(len(uniq), dtype=np.float64)
+    np.add.at(acc, inv, contrib)  # in pool order per doc
+    keep = np.ones(len(uniq), dtype=bool)
+    if msm > 1:
+        keep &= np.bincount(inv, minlength=len(uniq)) >= msm
+    if tomb is not None:
+        keep &= ~np.isin(uniq, tomb)
+    acc = acc[keep]
+    if acc.size < k:
+        return -math.inf
+    kth = float(np.partition(acc, -k)[-k])
+    return kth - abs(kth) * 1e-9 - 1e-300
+
+
+class WandSearcher:
+    """Warm-dictionary WAND serving: a driver-resident per-TERM metadata
+    cache, so a query over cached terms runs only the two scoring jobs
+    (one exchange under AQE); a query with new terms first runs the
+    two-job fill for ONLY the missing terms.
+
+    This is the Spark analog of the reference keeping its dictionary in
+    memory across queries (Dictionary.java:74-79 loads the whole
+    front-coded term file once; every query then binary-searches RAM):
+    per term we cache df, per-bucket max impact + block counts and the
+    ``seed_blocks`` highest-impact blocks decoded (with their doc
+    lengths); doc_len slabs of seed buckets are cached so later fills
+    skip them. All of it is metadata-sized and query-independent, so θ
+    seeding and bucket pruning run as driver numpy over the cache.
+
+    Cache growth is bounded by ``max_terms`` (FIFO eviction). Results
+    are exactly ``bm25_topk_wand``'s (pytest-locked parity, and both are
+    oracle-locked)."""
+
+    def __init__(
+        self,
+        blocks: DataFrame,
+        slabs: DataFrame,
+        n_docs: int,
+        total_tokens: int,
+        bucket_range: int,
+        block_size: int = 128,
+        k1: float = BM25_K1,
+        b: float = BM25_B,
+        seed_blocks: int = 32,
+        max_terms: int = 100_000,
+    ):
+        self.blocks = blocks
+        self.slabs = slabs
+        self._meta_src = blocks.select(*_META_COLS)
+        self._kernel_src = blocks.select(*_KERNEL_COLS)
+        self._slab_src = slabs.select(*_SLAB_COLS)
+        self.n_docs = int(n_docs)
+        self.total_tokens = int(total_tokens)
+        self.bucket_range = int(bucket_range)
+        self.block_size = int(block_size)
+        self.k1, self.b = k1, b
+        self.seed_blocks = int(seed_blocks)
+        self.max_terms = int(max_terms)
+        self.avgdl = self.total_tokens / self.n_docs if self.n_docs else 0.0
+        self._meta: dict[str, _TermMeta] = {}
+        self._slab_cache: dict[int, tuple[int, np.ndarray]] = {}
+        self.metadata_jobs = 0  # observability: number of cache fills
+
+    # ---- cache fill -------------------------------------------------
+    def _ensure_terms(self, terms: list[str], explain_out: list | None = None) -> None:
+        missing = [t for t in terms if t not in self._meta]
+        if not missing:
+            return
+        # job 1: metadata columns only, no exchange
+        meta_df = self._meta_src.filter(_sql_in("term", missing))
+        if explain_out is not None:
+            explain_out.append(meta_df)
+        pdf = meta_df.toPandas().sort_values(
+            ["term", "max_impact", "block_id"], ascending=[True, False, True], kind="mergesort"
+        )
+        self.metadata_jobs += 1
+        term_col = pdf["term"].to_numpy(object)
+        bucket = pdf["bucket"].to_numpy(np.int64)
+        block_id = pdf["block_id"].to_numpy(np.int64)
+        n = pdf["n"].to_numpy(np.int64)
+        mi = pdf["max_impact"].to_numpy(np.float64)
+        first = pdf["first_doc_id"].to_numpy(np.int64)
+        bounds = np.flatnonzero(term_col[1:] != term_col[:-1]) + 1 if len(pdf) else []
+        spans = {
+            term_col[s]: (s, e)
+            for s, e in zip(np.r_[0, bounds].astype(int), np.r_[bounds, len(pdf)].astype(int))
+            if e > s
+        }
+        top = {t: slice(s, min(e, s + self.seed_blocks)) for t, (s, e) in spans.items()}
+        seed_buckets = {int(x) for sl in top.values() for x in bucket[sl]}
+
+        # job 2: the seed blocks' payload ∪ uncached seed-bucket slabs; a
+        # block is keyed by (term, first_doc_id), unique as a term's
+        # blocks cover disjoint doc ranges
+        payload: dict[tuple[str, int], object] = {}
+        if top:
+            seeds_of = ", ".join(
+                f"{_sql(t)}, array({','.join(map(_sql, first[sl]))})" for t, sl in top.items()
+            )
+            frame = self._kernel_src.filter(
+                f"{_sql_in('term', top)} AND array_contains(map({seeds_of})[term], first_doc_id)"
+            )
+            need = sorted(seed_buckets - self._slab_cache.keys())
+            if need:
+                frame = frame.unionByName(
+                    self._slab_src.filter(_sql_in("bucket", need)), allowMissingColumns=True
+                )
+            if explain_out is not None:
+                explain_out.append(frame)
+            for r in frame.collect():
+                if r["term"] is None:
+                    self._slab_cache[int(r["bucket"])] = (
+                        int(r["base"]),
+                        np.frombuffer(r["lens"], dtype=np.uint32),
+                    )
+                else:
+                    payload[(r["term"], int(r["first_doc_id"]))] = r
+
+        for t in missing:
+            s, e = spans.get(t, (0, 0))
+            seeds = []
+            for j in range(s, min(e, s + self.seed_blocks)):
+                r = payload.get((t, int(first[j])))
+                sl = self._slab_cache.get(int(bucket[j]))
+                if r is None or sl is None:
+                    continue  # θ only weakens — never over-prunes
+                ids, tfs = decode_block(r)
+                seeds.append(_Seed(float(mi[j]), int(block_id[j]), ids, tfs,
+                                   sl[1][ids - sl[0]].astype(np.float64)))
+            bk, inv = np.unique(bucket[s:e], return_inverse=True)
+            bmax = np.zeros(len(bk), dtype=np.float64)
+            np.maximum.at(bmax, inv, mi[s:e])
+            # absent terms cache too (df=0) or they'd refetch per query
+            self._meta[t] = _TermMeta(
+                int(n[s:e].sum()), bk, bmax, np.bincount(inv, minlength=len(bk)), seeds
+            )
+        # FIFO evict — but never a term the in-flight query needs (a
+        # query wider than max_terms overflows temporarily instead)
+        needed = set(terms)
+        evictable = [t for t in self._meta if t not in needed]
+        while len(self._meta) > self.max_terms and evictable:
+            del self._meta[evictable.pop(0)]
+
+    # ---- planning ---------------------------------------------------
+    def _plan(self, terms, k, msm, wts, tomb, term_stats) -> _Plan | None:
+        """Weights, θ and surviving buckets of one query from the cache;
+        None when no doc can match (no known term, or fewer than msm)."""
+        w = {}
+        for t in terms:
+            df = self._meta[t].df if term_stats is None else term_stats.get(t, 0)
+            if df > 0:
+                w[t] = wts.get(t, 1.0) * _idf(self.n_docs, df)
+        if not w or len(w) < msm:
+            return None
+        theta = _seed_theta(
+            w, lambda t: self._meta[t].seeds, k, msm, tomb,
+            self.seed_blocks, self.avgdl, self.k1, self.b,
+        )
+        metas = [self._meta[t] for t in w]
+        buckets = np.unique(np.concatenate([m.buckets for m in metas]))
+        ub = np.zeros(len(buckets), dtype=np.float64)
+        nb = np.zeros(len(buckets), dtype=np.int64)
+        for wt, m in zip(w.values(), metas):  # sorted-term order
+            idx = np.searchsorted(buckets, m.buckets)
+            ub[idx] += wt * m.mi
+            nb[idx] += m.nb
+        live = ub >= theta
+        stats = {
+            "buckets_total": int(len(buckets)),
+            "buckets_pruned": int((~live).sum()),
+            "blocks_total": int(nb.sum()),
+            "blocks_in_pruned_buckets": int(nb[~live].sum()),
+            "blocks_decoded": 0,
+            "blocks_chunk_skipped": 0,
+            "threshold": theta,
+        }
+        return _Plan(w, theta, msm, buckets[live], stats)
+
+    def _score(self, plans: list[_Plan], k: int, tomb, counters=None, explain_out=None):
+        """The scoring kernel: surviving buckets' blocks ∪ their slab rows
+        through one ``groupBy("bucket").applyInPandas``; chunk-gated decode
+        and per-bucket top-k per query in-task, exact (score desc, doc_id
+        asc) k-merge per query on the driver. ``counters``: optional
+        (decoded, skipped) block accumulators. Memory note: the in-task
+        accumulator costs 8·bucket_range bytes per query active in the
+        bucket (+4·bucket_range for each one with min_should_match > 1)."""
+        out: list[list[tuple[int, float]]] = [[] for _ in plans]
+        union_b = np.unique(np.concatenate([p.surviving for p in plans]))
+        if union_b.size == 0:
+            return out
+        terms = sorted({t for p in plans for t in p.w})
+        # filters as SQL text: a Column per literal costs ~10 py4j round
+        # trips, which dominated driver time at thousand-bucket survivor lists
+        buckets_in = _sql_in("bucket", union_b)
+        frame = self._kernel_src.filter(
+            f"{_sql_in('term', terms)} AND {buckets_in}"
+        ).unionByName(self._slab_src.filter(buckets_in), allowMissingColumns=True)
+        w_q = [p.w for p in plans]
+        theta_q = [p.theta for p in plans]
+        msm_q = [p.msm for p in plans]
+        surv_q = [set(p.surviving.tolist()) for p in plans]
+        # locals only: the kernel closure is pickled and must not capture self
+        avgdl, k1, b = self.avgdl, self.k1, self.b
+        chunk = self.block_size
+        n_chunks = -(-self.bucket_range // chunk)
+
+        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+            empty = pd.DataFrame({"q": [], "doc_id": [], "score": []}).astype(
+                {"q": "int64", "doc_id": "int64", "score": "float64"}
+            )
+            is_slab = pdf["term"].isna().to_numpy()
+            bl = pdf[~is_slab].sort_values("term", kind="mergesort")  # sorted-term adds
+            bkt = int(pdf["bucket"].iat[0])
+            active = [q for q, s in enumerate(surv_q) if bkt in s]
+            if bl.empty or is_slab.sum() == 0 or not active:
+                return empty
+            slab = pdf[is_slab]
+            base = int(slab["base"].iat[0])
+            lens = np.frombuffer(slab["lens"].iat[0], dtype=np.uint32).astype(np.float64)
+            c0 = (bl["first_doc_id"].to_numpy(np.int64) - base) // chunk
+            c1 = (bl["last_doc_id"].to_numpy(np.int64) - base) // chunk
+            # per-term chunk-max impact, built once; w·max(mi) == max(w·mi)
+            # exactly (rounding is monotone), so every query shares it
+            tmax: dict[str, np.ndarray] = {}
+            for i, (t, mi) in enumerate(zip(bl["term"], bl["max_impact"].to_numpy(np.float64))):
+                arr = tmax.get(t)
+                if arr is None:
+                    arr = tmax[t] = np.zeros(n_chunks, dtype=np.float64)
+                np.maximum(arr[c0[i] : c1[i] + 1], mi, out=arr[c0[i] : c1[i] + 1])
+            live, takers_of = {}, {}
+            for q in active:
+                ub = np.zeros(n_chunks, dtype=np.float64)
+                for t, wt in w_q[q].items():
+                    if t in tmax:
+                        ub += wt * tmax[t]
+                        takers_of.setdefault(t, []).append(q)
+                live[q] = ub >= theta_q[q]
+            acc = {q: np.zeros(len(lens), dtype=np.float64) for q in active}
+            touched = {q: np.zeros(len(lens), dtype=bool) for q in active}
+            nmatch = {q: np.zeros(len(lens), dtype=np.int32) for q in active if msm_q[q] > 1}
+            decoded = skipped = 0
+            for i, row in enumerate(bl.itertuples(index=False)):
+                takers = [
+                    q for q in takers_of.get(row.term, ()) if live[q][c0[i] : c1[i] + 1].any()
+                ]
+                if not takers:
+                    skipped += 1  # chunk-level block-max skip for every query
+                    continue
+                decoded += 1
+                ids, tfs = decode_block(row)
+                ids -= base
+                dl = lens[ids]
+                contribs: dict[float, np.ndarray] = {}
+                for q in takers:  # decode once, scatter per taker
+                    wt = w_q[q][row.term]
+                    c = contribs.get(wt)
+                    if c is None:
+                        c = contribs[wt] = _contrib(wt, tfs, dl, avgdl, k1, b)
+                    acc[q][ids] += c
+                    touched[q][ids] = True
+                    if q in nmatch:
+                        nmatch[q][ids] += 1  # one posting per (term, doc): the distinct count
+            if counters is not None:
+                counters[0].add(decoded)
+                counters[1].add(skipped)
+            # live-chunk docs decoded every overlapping block, so their match
+            # counts are exact; dead-chunk docs are below θ regardless
+            for q, nm in nmatch.items():
+                touched[q] &= nm >= msm_q[q]
+            if tomb is not None:
+                # deleted-docs mask (Lucene bitset analog)
+                local = tomb[(tomb >= base) & (tomb < base + len(lens))] - base
+                for q in active:
+                    touched[q][local] = False
+            frames = []
+            for q in active:
+                cand = np.nonzero(touched[q])[0]
+                if cand.size:
+                    cand, scores = topk_select(cand, acc[q][cand], k)
+                    frames.append(pd.DataFrame({"q": q, "doc_id": cand + base, "score": scores}))
+            return pd.concat(frames) if frames else empty
+
+        scored = frame.groupBy("bucket").applyInPandas(kernel, schema=_OUT_SCHEMA)
+        if explain_out is not None:
+            explain_out.append(scored)  # plan audit hook (scripts/explain_plans.py)
+        for r in scored.collect():
+            out[r["q"]].append((r["doc_id"], r["score"]))
+        return [sorted(lst, key=lambda x: (-x[1], x[0]))[:k] for lst in out]
+
+    def _run(self, queries, k, tombstones=None, weights=None, term_stats=None,
+             return_stats=False, explain_out=None):
+        """Fill, plan and score a batch. ``queries``: [(terms, msm)] with
+        validated sorted terms; ``weights``: per-query boost maps or None.
+        Returns ([top-k per query], [stats per query])."""
+        results = [[] for _ in queries]
+        stats = [_zero_stats() for _ in queries]
+        all_terms = sorted({t for terms, _ in queries for t in terms})
+        if not all_terms or self.n_docs == 0:
+            return results, stats
+        tomb = _tomb_array(tombstones)
+        self._ensure_terms(all_terms, explain_out)
+        plans = {}
+        for i, (terms, msm) in enumerate(queries):
+            p = self._plan(terms, k, msm, (weights or {}).get(i, {}), tomb, term_stats)
+            if p is not None:
+                plans[i], stats[i] = p, p.stats
+        counters = None
+        if return_stats:
+            sc = self.blocks.sparkSession.sparkContext
+            counters = (sc.accumulator(0), sc.accumulator(0))
+        if plans:
+            got = self._score(list(plans.values()), k, tomb, counters, explain_out)
+            for i, topk in zip(plans, got):
+                results[i] = topk
+        if counters is not None and len(plans) == 1:
+            (i,) = plans
+            stats[i]["blocks_decoded"] = counters[0].value
+            stats[i]["blocks_chunk_skipped"] = counters[1].value
+        return results, stats
+
+    # ---- query ------------------------------------------------------
+    def search(
+        self,
+        query: list[str],
+        k: int,
+        tombstones=None,
+        min_should_match: int = 1,
+        weights: dict[str, float] | None = None,
+    ) -> list[tuple[int, float]]:
+        """``tombstones``: per-query deleted-doc set (same semantics as
+        bm25_topk_wand) — the cached per-term metadata is tombstone-
+        independent (seeds/impacts/dfs describe the on-disk index), so
+        deletes compose with a warm cache: filtering happens at θ-seed
+        time and in the kernel mask only. ``min_should_match``: m-of-n
+        matching, same exactness argument as bm25_topk_wand (θ seeded
+        only from observed-≥m docs; chunk gate unchanged). ``weights``:
+        per-term ^N boosts, folded into idf (the cached per-term
+        metadata is weight-independent — raw max_impacts — so boosts
+        compose with a warm cache)."""
+        terms = _query_terms(query, min_should_match)
+        wts = _norm_weights(weights, terms)
+        return self._run([(terms, min_should_match)], k, tombstones, {0: wts})[0][0]
+
+    def search_batch(
+        self,
+        queries: dict[str, list[str]],
+        k: int,
+        tombstones=None,
+        min_should_match: int | dict = 1,
+        term_stats: dict[str, int] | None = None,
+    ) -> dict[str, list[tuple[int, float]]]:
+        """Many queries through one fill and one scoring pass; same
+        arguments and results as ``bm25_topk_wand_batch``."""
+        if isinstance(min_should_match, dict):
+            unknown = set(min_should_match) - set(queries)
+            if unknown:
+                raise ValueError(f"min_should_match has unknown query ids: {sorted(unknown)}")
+            msm_q = {qid: int(min_should_match.get(qid, 1)) for qid in queries}
+        else:
+            msm_q = {qid: int(min_should_match) for qid in queries}
+        qids = list(queries)
+        batch = [(_query_terms(queries[q], msm_q[q], q), msm_q[q]) for q in qids]
+        got, _ = self._run(batch, k, tombstones, term_stats=term_stats)
+        return dict(zip(qids, got))
 
 
 def bm25_topk_wand(
@@ -127,15 +598,18 @@ def bm25_topk_wand(
     weights: dict[str, float] | None = None,
 ):
     """Exact BM25 top-k [(doc_id, score)] with distributed block-max
-    pruning. ``slabs`` is the build-time doc_len sidecar
+    pruning: a ``WandSearcher`` with an empty cache, so four Spark jobs
+    (the two-job fill, the two-job scoring pass) and at most one
+    exchange. ``slabs`` is the build-time doc_len sidecar
     (posting_blocks.build_doc_len_slabs) — the docs table itself is
-    never read at query time. A query runs exactly TWO Spark jobs: one
-    metadata collect (term dfs when ``term_stats`` is None, seed blocks,
-    seed slabs, bucket upper bounds — unioned into a single frame) and
-    the surviving-bucket cogroup. ``term_stats``: optional {term: df}
-    from the caller's terms-table cache. With ``return_stats`` also returns
+    never read at query time. ``term_stats``: optional {term: df} from
+    the caller's terms-table cache, used for idf in place of the dfs
+    the fill derives. With ``return_stats`` also returns
     {"buckets_total", "buckets_pruned", "blocks_total",
-    "blocks_in_pruned_buckets", "threshold"}.
+    "blocks_in_pruned_buckets", "blocks_decoded", "blocks_chunk_skipped",
+    "threshold"}. ``explain_out``: a list that receives every DataFrame
+    the call executes, in order (fill metadata scan, fill payload scan,
+    scoring pass).
 
     ``tombstones``: optional deleted-doc set (iterable of doc_ids or a
     (doc_id) DataFrame, e.g. deletes.tombstones_for_convs output) —
@@ -161,319 +635,59 @@ def bm25_topk_wand(
     Searcher.bm25_search_msm. Exactness under pruning: θ is seeded only
     from docs whose SEED-OBSERVED match count is already ≥ m (observed
     ≤ true count, so every seeded doc is valid and θ stays a lower
-    bound on the k-th valid score), and the cogroup's chunk gate is
+    bound on the k-th valid score), and the kernel's chunk gate is
     unchanged — chunks partition doc-id space, so a live-chunk doc
     decodes ALL its blocks (exact score AND exact match count) while a
     dead-chunk doc is provably below θ, valid or not.
     """
-    terms = sorted({t.lower() for t in query})
-    if not 1 <= min_should_match <= max(len(terms), 1):
-        raise ValueError(
-            f"min_should_match {min_should_match} out of [1, {len(terms)}] "
-            f"for query terms {terms}"
-        )
+    terms = _query_terms(query, min_should_match)
     wts = _norm_weights(weights, terms)
-    if not terms or n_docs == 0:
-        return ([], _zero_stats()) if return_stats else []
-    tomb = _tomb_array(tombstones)
-    tomb_set = set(tomb.tolist()) if tomb is not None else None
-    qblocks = blocks.filter(F.col("term").isin(terms))
-
-    # ---- 1+2 metadata: ONE Spark job (VERDICT r2 "what's wrong" #2 —
-    # the old path ran 3-4 sequential driver collects per query). A
-    # single unionByName frame carries four row kinds:
-    #   df   — per-term document frequency (only when term_stats is None)
-    #   seed — the seed_blocks highest idf·max_impact blocks WITH payload
-    #   slab — doc_len slabs of the seed blocks' buckets (semi-join)
-    #   ub   — per-bucket score upper bound + block count
-    # When term_stats is None the in-query weight uses Catalyst's ln();
-    # it may differ from Python math.log by ≤1 ulp, which only affects
-    # seed ORDERING and the ub-vs-θ comparison — both are covered by
-    # θ's 1e-9 relative slack. Exact scoring always uses math.log idf
-    # recomputed on the driver from the collected integer dfs.
-    if term_stats is not None:
-        idf0 = {
-            t: wts.get(t, 1.0) * math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-            for t, df in term_stats.items()
-            if df > 0
-        }
-        if not idf0:
-            return ([], _zero_stats()) if return_stats else []
-        w_map = F.create_map(*[F.lit(x) for kv in sorted(idf0.items()) for x in kv])
-        qb = qblocks.withColumn("w", F.coalesce(w_map[F.col("term")], F.lit(0.0)))
-        df_frame = None
-    else:
-        # per-term df via a metadata-only aggregate broadcast back onto
-        # the blocks — a window over term would shuffle the BINARY
-        # payload columns; this moves ≤|terms| rows instead
-        df_small = qblocks.groupBy("term").agg(F.sum("n").alias("dfv"))
-        wt_map = F.create_map(
-            *[F.lit(x) for kv in sorted(wts.items()) for x in kv]
-        ) if wts else None
-        w_expr = F.log(
-            (F.lit(float(n_docs)) - F.col("dfv") + 0.5) / (F.col("dfv") + 0.5)
-            + 1.0
-        )
-        if wt_map is not None:
-            w_expr = w_expr * F.coalesce(wt_map[F.col("term")], F.lit(1.0))
-        qb = qblocks.join(F.broadcast(df_small), "term").withColumn("w", w_expr)
-        df_frame = df_small.select(F.lit("df").alias("kind"), "term", "dfv")
-    # total order (wimp ties broken by term, block_id): seed_frame is
-    # referenced twice in the DAG (payload select + slab semi-join) and
-    # a ties-nondeterministic limit could give the two subtrees
-    # DIFFERENT seed sets — a seed row without its slab row
-    seed_frame = (
-        qb.withColumn("wimp", F.col("w") * F.col("max_impact"))
-        .orderBy(F.desc("wimp"), F.asc("term"), F.asc("block_id"))
-        .limit(seed_blocks)
+    ws = WandSearcher(
+        blocks, slabs, n_docs, total_tokens, bucket_range, block_size, k1, b, seed_blocks
     )
-    seed_sel = seed_frame.select(
-        F.lit("seed").alias("kind"), "term", "bucket", "n",
-        "first_doc_id", "last_doc_id",
-        "gaps_ctrl", "gaps_data", "tfs_ctrl", "tfs_data",
+    got, stats = ws._run(
+        [(terms, min_should_match)], k, tombstones, {0: wts}, term_stats, return_stats, explain_out
     )
-    slab_sel = slabs.join(
-        seed_frame.select("bucket").distinct(), "bucket", "left_semi"
-    ).select(F.lit("slab").alias("kind"), "bucket", "base", "lens")
-    ub_sel = (
-        qb.groupBy("bucket", "term")
-        .agg(
-            F.max("max_impact").alias("mi"),
-            F.first("w").alias("w"),
-            F.count(F.lit(1)).alias("nb_t"),
-        )
-        .groupBy("bucket")
-        .agg(
-            F.sum(F.col("w") * F.col("mi")).alias("ub"),
-            F.sum("nb_t").alias("nb"),
-        )
-        .select(F.lit("ub").alias("kind"), "bucket", "ub", "nb")
+    return (got[0], stats[0]) if return_stats else got[0]
+
+
+def bm25_topk_wand_batch(
+    blocks: DataFrame,
+    slabs: DataFrame,
+    queries: dict[str, list[str]],
+    k: int,
+    n_docs: int,
+    total_tokens: int,
+    bucket_range: int,
+    block_size: int = 128,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+    term_stats: dict[str, int] | None = None,
+    seed_blocks: int = 32,
+    tombstones=None,
+    min_should_match: int | dict = 1,
+) -> dict[str, list[tuple[int, float]]]:
+    """Exact BM25 top-k for MANY queries in four Spark jobs total — the
+    two-job fill over the union of the queries' terms, then one scoring
+    pass over the union of their surviving buckets, in which every
+    surviving block decodes at most once however many queries share its
+    term and each query gates chunks on its own θ_q. Q queries through
+    ``bm25_topk_wand`` would cost 4Q jobs. Memory note: the in-task
+    accumulator costs 8·bucket_range bytes PER ACTIVE QUERY — size
+    batches accordingly (e.g. ≤64 queries at bucket_range 2^22).
+
+    Returns ``{qid: [(doc_id, score), ...]}``; rank-identical to
+    per-query ``bm25_topk_wand`` (pytest-locked). ``tombstones`` applies
+    the same deleted-docs semantics as ``bm25_topk_wand`` to every
+    query in the batch. ``min_should_match``: an int for every query or
+    a {qid: m} dict (missing qids default to 1) — same semantics and
+    exactness argument as the single-query path; each m-filtered query
+    adds a 4·bucket_range-byte match-count array in-task.
+    """
+    ws = WandSearcher(
+        blocks, slabs, n_docs, total_tokens, bucket_range, block_size, k1, b, seed_blocks
     )
-    meta = seed_sel.unionByName(slab_sel, allowMissingColumns=True).unionByName(
-        ub_sel, allowMissingColumns=True
-    )
-    if df_frame is not None:
-        meta = meta.unionByName(df_frame, allowMissingColumns=True)
-    meta_rows = meta.collect()
-
-    seed_rows = [r for r in meta_rows if r["kind"] == "seed"]
-    slab_map = {
-        int(r["bucket"]): (int(r["base"]), np.frombuffer(r["lens"], dtype=np.uint32))
-        for r in meta_rows
-        if r["kind"] == "slab"
-    }
-    ub_rows = [r for r in meta_rows if r["kind"] == "ub"]
-    if term_stats is None:
-        term_stats = {r["term"]: r["dfv"] for r in meta_rows if r["kind"] == "df"}
-    idf = {
-        t: wts.get(t, 1.0) * math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-        for t, df in term_stats.items()
-        if df > 0
-    }
-    if not idf:
-        return ([], _zero_stats()) if return_stats else []
-    avgdl = total_tokens / n_docs
-
-    # ---- threshold seed: decode the hottest blocks on the driver ----
-    theta = -math.inf
-    if len(idf) < min_should_match:
-        return ([], _zero_stats()) if return_stats else []
-    if seed_rows:
-        acc: dict[int, float] = {}
-        cnt: dict[int, int] = {}
-        for r in sorted(seed_rows, key=lambda r: r["term"]):  # oracle add order
-            w = idf.get(r["term"])
-            sl = slab_map.get(int(r["bucket"]))
-            if w is None or sl is None:
-                continue  # skipping only weakens θ — never over-prunes
-            base, lens = sl
-            gaps = svb_decode(r["gaps_ctrl"], r["gaps_data"], r["n"]).astype(np.int64)
-            ids = np.cumsum(gaps) + (int(r["first_doc_id"]) - 1)
-            tfs = tf_decode(r["tfs_ctrl"], r["tfs_data"], r["n"]).astype(np.float64)
-            dl = lens[ids - base].astype(np.float64)
-            for d, c in zip(ids.tolist(), _contrib(w, tfs, dl, avgdl, k1, b).tolist()):
-                acc[d] = acc.get(d, 0.0) + c
-                cnt[d] = cnt.get(d, 0) + 1
-        if min_should_match > 1:
-            # observed count ≤ true count: every kept doc is truly valid,
-            # so θ never exceeds the k-th valid score (drops only weaken θ)
-            acc = {d: v for d, v in acc.items() if cnt[d] >= min_should_match}
-        if tomb_set is not None:
-            acc = {d: v for d, v in acc.items() if d not in tomb_set}
-        if len(acc) >= k:
-            kth = float(np.partition(np.fromiter(acc.values(), dtype=np.float64), -k)[-k])
-            # nudge down a few ulps: the seed's add order may differ from
-            # the exact scorer's, so a hair of slack guards tie docs
-            theta = kth - abs(kth) * 1e-9 - 1e-300
-
-    # ---- 2. bucket-level skip (already collected in the metadata job) ----
-    surviving = [int(r["bucket"]) for r in ub_rows if r["ub"] >= theta]
-    stats = {
-        "buckets_total": len(ub_rows),
-        "buckets_pruned": len(ub_rows) - len(surviving),
-        "threshold": theta,
-        "blocks_total": sum(r["nb"] for r in ub_rows),
-        "blocks_in_pruned_buckets": sum(
-            r["nb"] for r in ub_rows if r["ub"] < theta
-        ),
-        "blocks_decoded": 0,
-        "blocks_chunk_skipped": 0,
-    }
-    if not surviving:
-        return ([], stats) if return_stats else []
-
-    # executor-side skip counters: chunk-gate decisions are only
-    # observable in-task, so measure them with accumulators
-    acc_dec = acc_skip = None
-    if return_stats:
-        sc = blocks.sparkSession.sparkContext
-        acc_dec = sc.accumulator(0)
-        acc_skip = sc.accumulator(0)
-
-    topk = _single_query_cogroup(
-        blocks, slabs, qblocks, surviving, idf, theta, k, avgdl,
-        k1, b, bucket_range, block_size,
-        acc_dec=acc_dec, acc_skip=acc_skip, explain_out=explain_out, tomb=tomb,
-        msm=min_should_match,
-    )
-    if return_stats:
-        stats["blocks_decoded"] = acc_dec.value
-        stats["blocks_chunk_skipped"] = acc_skip.value
-    return (topk, stats) if return_stats else topk
-
-
-def _survivor_frames(blocks, slabs, qblocks, surviving):
-    """Restrict blocks+slabs to the surviving buckets.
-
-    VERDICT r2 "what's wrong" #4: a literal IN list pushes to the scan
-    (parquet row-group / partition pruning — the IO win bucket-skip
-    exists for), so keep it while the list is scan-prunable-sized. When
-    thousands of buckets survive (hot-only queries at high bucket
-    counts — exactly the case where pruning saves ~nothing anyway),
-    switch to a broadcast semi-join so the plan never carries a
-    multi-thousand-element IN expression."""
-    if len(surviving) <= 1024:
-        return (
-            qblocks.filter(F.col("bucket").isin(surviving)),
-            slabs.filter(F.col("bucket").isin(surviving)),
-        )
-    surv_df = blocks.sparkSession.createDataFrame(
-        [(int(b_),) for b_ in surviving], "bucket long"
-    )
-    return (
-        qblocks.join(F.broadcast(surv_df), "bucket", "left_semi"),
-        slabs.join(F.broadcast(surv_df), "bucket", "left_semi"),
-    )
-
-
-def _single_query_cogroup(
-    blocks, slabs, qblocks, surviving, idf, theta, k, avgdl,
-    k1, b, bucket_range, block_size,
-    acc_dec=None, acc_skip=None, explain_out=None, tomb=None, msm=1,
-) -> list[tuple[int, float]]:
-    """Stages 3+4 of the single-query plan: surviving buckets cogroup
-    with their doc_len slabs, chunk-gated decode + bounded per-bucket
-    top-k in-task, exact (score desc, doc_id asc) k-merge on the driver.
-    Shared by ``bm25_topk_wand`` (cold) and ``WandSearcher`` (warm)."""
-    blocks_surv, slabs_surv = _survivor_frames(blocks, slabs, qblocks, surviving)
-
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    out_schema = StructType(
-        [StructField("doc_id", LongType()), StructField("score", DoubleType())]
-    )
-    idf_b = dict(idf)
-    theta_b = theta
-    chunk = block_size
-    n_chunks = -(-bucket_range // chunk)
-
-    def cogroup_fn(blocks_pdf: pd.DataFrame, slab_pdf: pd.DataFrame) -> pd.DataFrame:
-        if blocks_pdf.empty or slab_pdf.empty:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(_EMPTY)
-        base = int(slab_pdf["base"].iat[0])
-        lens = np.frombuffer(slab_pdf["lens"].iat[0], dtype=np.uint32).astype(np.float64)
-        c0 = ((blocks_pdf["first_doc_id"].to_numpy(np.int64) - base) // chunk)
-        c1 = ((blocks_pdf["last_doc_id"].to_numpy(np.int64) - base) // chunk)
-        wimp = np.array(
-            [idf_b.get(t, 0.0) for t in blocks_pdf["term"]], dtype=np.float64
-        ) * blocks_pdf["max_impact"].to_numpy(np.float64)
-        # per-chunk ub = Σ_t max over t's blocks overlapping the chunk
-        ub = np.zeros(n_chunks, dtype=np.float64)
-        order = np.argsort(blocks_pdf["term"].to_numpy(), kind="mergesort")
-        tmax = np.zeros(n_chunks, dtype=np.float64)
-        prev_term = None
-        for i in order.tolist():
-            t = blocks_pdf["term"].iat[i]
-            if t != prev_term:
-                if prev_term is not None:
-                    ub += tmax
-                    tmax[:] = 0.0
-                prev_term = t
-            np.maximum(tmax[c0[i] : c1[i] + 1], wimp[i], out=tmax[c0[i] : c1[i] + 1])
-        ub += tmax
-        live = ub >= theta_b
-
-        acc = np.zeros(len(lens), dtype=np.float64)
-        touched = np.zeros(len(lens), dtype=bool)
-        nmatch = np.zeros(len(lens), dtype=np.int32) if msm > 1 else None
-        for term, grp in blocks_pdf.groupby("term", sort=True):
-            w = idf_b.get(term)
-            if w is None:
-                continue
-            for row in grp.itertuples(index=False):
-                lo = (int(row.first_doc_id) - base) // chunk
-                hi = (int(row.last_doc_id) - base) // chunk
-                if not live[lo : hi + 1].any():
-                    if acc_skip is not None:
-                        acc_skip.add(1)
-                    continue  # chunk-level block-max skip
-                if acc_dec is not None:
-                    acc_dec.add(1)
-                gaps = svb_decode(row.gaps_ctrl, row.gaps_data, row.n).astype(np.int64)
-                ids = np.cumsum(gaps) + (int(row.first_doc_id) - 1) - base
-                tfs = tf_decode(row.tfs_ctrl, row.tfs_data, row.n).astype(np.float64)
-                acc[ids] += _contrib(w, tfs, lens[ids], avgdl, k1, b)
-                touched[ids] = True
-                if nmatch is not None:
-                    nmatch[ids] += 1  # one posting per (term, doc): += 1 is the distinct count
-            # sorted-term accumulation keeps float adds in oracle order
-        if nmatch is not None:
-            # live-chunk docs decoded every overlapping block, so their
-            # counts are exact; dead-chunk docs are below θ regardless
-            touched &= nmatch >= msm
-        if tomb is not None:
-            # deleted-docs mask (Lucene bitset analog): tombstoned slots
-            # never reach candidate selection
-            local = tomb[(tomb >= base) & (tomb < base + len(lens))] - base
-            touched[local] = False
-        cand = np.nonzero(touched)[0]
-        if cand.size == 0:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(_EMPTY)
-        cand, scores = topk_select(cand, acc[cand], k)
-        return pd.DataFrame({"doc_id": cand + base, "score": scores})
-
-    local_topk = (
-        blocks_surv.groupBy("bucket")
-        .cogroup(slabs_surv.groupBy("bucket"))
-        .applyInPandas(cogroup_fn, schema=out_schema)
-    )
-    if explain_out is not None:
-        explain_out.append(local_topk)  # plan audit hook (scripts/explain_plans.py)
-    # driver k-merge with exact tie-break (score desc, doc_id asc)
-    rows = local_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    return [(r["doc_id"], r["score"]) for r in rows]
-
-
-def _zero_stats():
-    return {
-        "buckets_total": 0,
-        "buckets_pruned": 0,
-        "blocks_total": 0,
-        "blocks_in_pruned_buckets": 0,
-        "blocks_decoded": 0,
-        "blocks_chunk_skipped": 0,
-        "threshold": -math.inf,
-    }
+    return ws.search_batch(queries, k, tombstones, min_should_match, term_stats)
 
 
 def bm25_topk_wand_blockmax(
@@ -520,13 +734,10 @@ def bm25_topk_wand_blockmax(
             if w is None:
                 continue
             for row in trows.itertuples(index=False):
-                n = row.n
-                gaps = svb_decode(row.gaps_ctrl, row.gaps_data, n).astype(np.int64)
-                ids = np.cumsum(gaps) + (int(row.first_doc_id) - 1) - base
-                tfs = tf_decode(row.tfs_ctrl, row.tfs_data, n).astype(np.float64)
-                dl = doc_lens[ids + base]
-                acc[ids] += _contrib(w, tfs, dl, avgdl, k1, b)  # ids unique per block
-                touched[ids] = True
+                ids, tfs = decode_block(row)
+                # ids unique per block
+                acc[ids - base] += _contrib(w, tfs, doc_lens[ids], avgdl, k1, b)
+                touched[ids - base] = True
         cand = np.nonzero(touched)[0]
         cand, scores = topk_select(cand, acc[cand], k)
         for d, s in zip((cand + base).tolist(), scores.tolist()):
@@ -536,545 +747,3 @@ def bm25_topk_wand_blockmax(
             elif item > heap[0]:
                 heapq.heapreplace(heap, item)
     return [(-nd, s) for s, nd in sorted(heap, key=lambda x: (-x[0], -x[1]))]
-
-
-def bm25_topk_wand_batch(
-    blocks: DataFrame,
-    slabs: DataFrame,
-    queries: dict[str, list[str]],
-    k: int,
-    n_docs: int,
-    total_tokens: int,
-    bucket_range: int,
-    block_size: int = 128,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    term_stats: dict[str, int] | None = None,
-    seed_blocks: int = 32,
-    tombstones=None,
-    min_should_match: int | dict = 1,
-) -> dict[str, list[tuple[int, float]]]:
-    """Exact BM25 top-k for MANY queries in TWO Spark jobs total — the
-    high-throughput shape for 10^12-doc serving backfills (one query =
-    2 jobs, so Q queries through ``bm25_topk_wand`` cost 2Q jobs; this
-    path amortizes both jobs across the whole batch and decodes every
-    surviving block ONCE per bucket regardless of how many queries
-    share its term).
-
-    Job 1 (metadata): per-term df (unless ``term_stats``), per-term
-    top-``seed_blocks`` candidate blocks with payload (ranked by
-    max_impact — idf is constant within a term, so the per-term order
-    needs no weights; a broadcast semi-join fetches payloads without
-    shuffling them), per-(bucket, term) max impact + block counts, and
-    doc_len slabs of every candidate seed bucket — one unionByName
-    collect. Per query, the driver then seeds θ_q from the top blocks
-    of ITS terms (a subset of the per-term pools) and prunes buckets
-    with Σ_t idf_t·mi(bucket,t) < θ_q.
-
-    Job 2 (cogroup): buckets in the union of the queries' surviving
-    sets; inside a bucket, per-term chunk-max arrays are built once,
-    each query gates on its own θ_q, blocks decode at most once, and
-    per-query dense accumulators emit per-bucket (qid, doc_id, score)
-    top-k rows (float adds in sorted-term order — oracle-identical).
-    Driver k-merges per qid with the exact (score desc, doc_id asc)
-    tie-break. Memory note: the in-task accumulator costs
-    8·bucket_range bytes PER ACTIVE QUERY — size batches accordingly
-    (e.g. ≤64 queries at bucket_range 2^22).
-
-    Returns ``{qid: [(doc_id, score), ...]}``; rank-identical to
-    per-query ``bm25_topk_wand`` (pytest-locked). ``tombstones`` applies
-    the same deleted-docs semantics as ``bm25_topk_wand`` to every
-    query in the batch. ``min_should_match``: an int for every query or
-    a {qid: m} dict (missing qids default to 1) — same semantics and
-    exactness argument as the single-query path; each m-filtered query
-    adds a 4·bucket_range-byte match-count array in-task.
-    """
-    qterms = {qid: sorted({t.lower() for t in q}) for qid, q in queries.items()}
-    if isinstance(min_should_match, dict):
-        unknown = set(min_should_match) - set(queries)
-        if unknown:
-            raise ValueError(
-                f"min_should_match has unknown query ids: {sorted(unknown)}"
-            )
-        msm_q = {qid: int(min_should_match.get(qid, 1)) for qid in queries}
-    else:
-        msm_q = {qid: int(min_should_match) for qid in queries}
-    for qid, m in msm_q.items():
-        if not 1 <= m <= max(len(qterms[qid]), 1):
-            raise ValueError(
-                f"min_should_match {m} out of [1, {len(qterms[qid])}] "
-                f"for query {qid!r}"
-            )
-    all_terms = sorted({t for ts in qterms.values() for t in ts})
-    out: dict[str, list[tuple[int, float]]] = {qid: [] for qid in queries}
-    if not all_terms or n_docs == 0:
-        return out
-    tomb = _tomb_array(tombstones)
-    tomb_set = set(tomb.tolist()) if tomb is not None else None
-    qblocks = blocks.filter(F.col("term").isin(all_terms))
-    avgdl = total_tokens / n_docs
-
-    # ---- job 1: one metadata collect --------------------------------
-    from pyspark.sql.window import Window
-
-    meta_small = qblocks.select("term", "bucket", "block_id", "max_impact", "n")
-    ranked = meta_small.withColumn(
-        "rk",
-        F.row_number().over(
-            Window.partitionBy("term").orderBy(F.desc("max_impact"), F.asc("block_id"))
-        ),
-    ).filter(F.col("rk") <= seed_blocks)
-    seed_keys = ranked.select("term", "block_id")
-    seed_sel = qblocks.join(
-        F.broadcast(seed_keys), ["term", "block_id"], "left_semi"
-    ).select(
-        F.lit("seed").alias("kind"), "term", "bucket", "n", "max_impact",
-        "first_doc_id", "gaps_ctrl", "gaps_data", "tfs_ctrl", "tfs_data",
-    )
-    slab_sel = slabs.join(
-        F.broadcast(ranked.select("bucket").distinct()), "bucket", "left_semi"
-    ).select(F.lit("slab").alias("kind"), "bucket", "base", "lens")
-    ubt_sel = (
-        meta_small.groupBy("bucket", "term")
-        .agg(F.max("max_impact").alias("mi"), F.count(F.lit(1)).alias("nb"))
-        .select(F.lit("ubt").alias("kind"), "bucket", "term", "mi", "nb")
-    )
-    meta = seed_sel.unionByName(slab_sel, allowMissingColumns=True).unionByName(
-        ubt_sel, allowMissingColumns=True
-    )
-    if term_stats is None:
-        meta = meta.unionByName(
-            meta_small.groupBy("term")
-            .agg(F.sum("n").alias("dfv"))
-            .select(F.lit("df").alias("kind"), "term", "dfv"),
-            allowMissingColumns=True,
-        )
-    meta_rows = meta.collect()
-
-    seed_rows = [r for r in meta_rows if r["kind"] == "seed"]
-    slab_map = {
-        int(r["bucket"]): (int(r["base"]), np.frombuffer(r["lens"], dtype=np.uint32))
-        for r in meta_rows
-        if r["kind"] == "slab"
-    }
-    ubt_rows = [r for r in meta_rows if r["kind"] == "ubt"]
-    if term_stats is None:
-        term_stats = {r["term"]: r["dfv"] for r in meta_rows if r["kind"] == "df"}
-    idf = {
-        t: math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-        for t, df in term_stats.items()
-        if df > 0
-    }
-
-    # per-term seed pools, decoded once and shared across queries
-    seeds_by_term: dict[str, list] = {}
-    for r in seed_rows:
-        seeds_by_term.setdefault(r["term"], []).append(r)
-    decoded_seed_cache: dict[tuple[str, int], tuple] = {}
-
-    def _decode_seed(r) -> tuple | None:
-        key = (r["term"], int(r["first_doc_id"]))
-        if key not in decoded_seed_cache:
-            sl = slab_map.get(int(r["bucket"]))
-            if sl is None:
-                return None
-            base, lens = sl
-            gaps = svb_decode(r["gaps_ctrl"], r["gaps_data"], r["n"]).astype(np.int64)
-            ids = np.cumsum(gaps) + (int(r["first_doc_id"]) - 1)
-            tfs = tf_decode(r["tfs_ctrl"], r["tfs_data"], r["n"]).astype(np.float64)
-            dl = lens[ids - base].astype(np.float64)
-            decoded_seed_cache[key] = (ids, tfs, dl)
-        return decoded_seed_cache[key]
-
-    # per-query thresholds (same seeding rule as the single-query path)
-    thetas: dict[str, float] = {}
-    for qid, terms in qterms.items():
-        pool = [
-            (idf[r["term"]] * float(r["max_impact"]), r)
-            for t in terms
-            if t in idf
-            for r in seeds_by_term.get(t, [])
-        ]
-        pool.sort(key=lambda x: (-x[0], x[1]["term"], int(x[1]["first_doc_id"])))
-        acc: dict[int, float] = {}
-        cnt: dict[int, int] = {}
-        for _, r in sorted(pool[:seed_blocks], key=lambda x: x[1]["term"]):
-            dec = _decode_seed(r)
-            if dec is None:
-                continue
-            ids, tfs, dl = dec
-            w = idf[r["term"]]
-            for d, c in zip(ids.tolist(), _contrib(w, tfs, dl, avgdl, k1, b).tolist()):
-                acc[d] = acc.get(d, 0.0) + c
-                cnt[d] = cnt.get(d, 0) + 1
-        if msm_q[qid] > 1:
-            acc = {d: v for d, v in acc.items() if cnt[d] >= msm_q[qid]}
-        if tomb_set is not None:
-            acc = {d: v for d, v in acc.items() if d not in tomb_set}
-        theta = -math.inf
-        if len(acc) >= k:
-            kth = float(np.partition(np.fromiter(acc.values(), dtype=np.float64), -k)[-k])
-            theta = kth - abs(kth) * 1e-9 - 1e-300
-        thetas[qid] = theta
-
-    # per-query surviving buckets from the (bucket, term) upper bounds
-    mi_by_bucket: dict[int, dict[str, float]] = {}
-    for r in ubt_rows:
-        mi_by_bucket.setdefault(int(r["bucket"]), {})[r["term"]] = float(r["mi"])
-    surv_by_query: dict[str, set[int]] = {}
-    for qid, terms in qterms.items():
-        tset = [t for t in terms if t in idf]
-        if len(tset) < msm_q[qid]:
-            surv_by_query[qid] = set()  # m unsatisfiable: empty by definition
-            continue
-        surv_by_query[qid] = {
-            bkt
-            for bkt, mis in mi_by_bucket.items()
-            if sum(idf[t] * mis[t] for t in tset if t in mis) >= thetas[qid]
-        }
-    union_surv = sorted(set().union(*surv_by_query.values())) if surv_by_query else []
-    if not union_surv:
-        return out
-
-    blocks_surv, slabs_surv = _survivor_frames(blocks, slabs, qblocks, union_surv)
-
-    from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("qid", StringType()),
-            StructField("doc_id", LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-    idf_b = dict(idf)
-    qterms_b = {qid: [t for t in ts if t in idf] for qid, ts in qterms.items()}
-    thetas_b = dict(thetas)
-    msm_b = dict(msm_q)
-    surv_b = {qid: s for qid, s in surv_by_query.items()}
-    chunk = block_size
-    n_chunks = -(-bucket_range // chunk)
-    kk = k
-
-    def cogroup_fn(blocks_pdf: pd.DataFrame, slab_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"qid": [], "doc_id": [], "score": []}).astype(
-            {"qid": "object", "doc_id": "int64", "score": "float64"}
-        )
-        if blocks_pdf.empty or slab_pdf.empty:
-            return empty
-        bkt = int(blocks_pdf["bucket"].iat[0])
-        active = [qid for qid, s in surv_b.items() if bkt in s]
-        if not active:
-            return empty
-        base = int(slab_pdf["base"].iat[0])
-        lens = np.frombuffer(slab_pdf["lens"].iat[0], dtype=np.uint32).astype(np.float64)
-        # per-term chunk-max impact arrays, built once, shared by queries
-        c0 = (blocks_pdf["first_doc_id"].to_numpy(np.int64) - base) // chunk
-        c1 = (blocks_pdf["last_doc_id"].to_numpy(np.int64) - base) // chunk
-        tmax: dict[str, np.ndarray] = {}
-        for i, t in enumerate(blocks_pdf["term"]):
-            arr = tmax.get(t)
-            if arr is None:
-                arr = tmax[t] = np.zeros(n_chunks, dtype=np.float64)
-            mi = float(blocks_pdf["max_impact"].iat[i])
-            np.maximum(arr[c0[i] : c1[i] + 1], mi, out=arr[c0[i] : c1[i] + 1])
-        live: dict[str, np.ndarray] = {}
-        for qid in active:
-            ub = np.zeros(n_chunks, dtype=np.float64)
-            for t in qterms_b[qid]:
-                if t in tmax:
-                    ub += idf_b[t] * tmax[t]
-            live[qid] = ub >= thetas_b[qid]
-        queries_of_term: dict[str, list[str]] = {}
-        for qid in active:
-            for t in qterms_b[qid]:
-                queries_of_term.setdefault(t, []).append(qid)
-
-        accs = {qid: np.zeros(len(lens), dtype=np.float64) for qid in active}
-        touched = {qid: np.zeros(len(lens), dtype=bool) for qid in active}
-        nmatch = {
-            qid: np.zeros(len(lens), dtype=np.int32)
-            for qid in active
-            if msm_b[qid] > 1
-        }
-        for term, grp in blocks_pdf.groupby("term", sort=True):
-            w = idf_b.get(term)
-            qids = queries_of_term.get(term)
-            if w is None or not qids:
-                continue
-            for row in grp.itertuples(index=False):
-                lo = (int(row.first_doc_id) - base) // chunk
-                hi = (int(row.last_doc_id) - base) // chunk
-                takers = [q for q in qids if live[q][lo : hi + 1].any()]
-                if not takers:
-                    continue  # chunk-level skip for EVERY query
-                gaps = svb_decode(row.gaps_ctrl, row.gaps_data, row.n).astype(np.int64)
-                ids = np.cumsum(gaps) + (int(row.first_doc_id) - 1) - base
-                tfs = tf_decode(row.tfs_ctrl, row.tfs_data, row.n).astype(np.float64)
-                contrib = _contrib(w, tfs, lens[ids], avgdl, k1, b)
-                for q_ in takers:  # decode once, scatter per taker
-                    accs[q_][ids] += contrib
-                    touched[q_][ids] = True
-                    if q_ in nmatch:
-                        nmatch[q_][ids] += 1
-        for qid, nm in nmatch.items():
-            touched[qid] &= nm >= msm_b[qid]
-        if tomb is not None:
-            local = tomb[(tomb >= base) & (tomb < base + len(lens))] - base
-            for qid in active:
-                touched[qid][local] = False
-        frames = []
-        for qid in active:
-            cand = np.nonzero(touched[qid])[0]
-            if cand.size == 0:
-                continue
-            cand, scores = topk_select(cand, accs[qid][cand], kk)
-            frames.append(
-                pd.DataFrame({"qid": qid, "doc_id": cand + base, "score": scores})
-            )
-        return pd.concat(frames) if frames else empty
-
-    rows = (
-        blocks_surv.groupBy("bucket")
-        .cogroup(slabs_surv.groupBy("bucket"))
-        .applyInPandas(cogroup_fn, schema=out_schema)
-        .collect()
-    )
-    per_q: dict[str, list[tuple[int, float]]] = {qid: [] for qid in queries}
-    for r in rows:
-        per_q[r["qid"]].append((r["doc_id"], r["score"]))
-    for qid, lst in per_q.items():
-        lst.sort(key=lambda x: (-x[1], x[0]))
-        out[qid] = lst[:k]
-    return out
-
-
-class WandSearcher:
-    """Warm-dictionary WAND serving: a driver-resident per-TERM metadata
-    cache so repeat queries over cached terms run exactly ONE Spark job
-    (the surviving-bucket cogroup) instead of two.
-
-    This is the Spark analog of the reference keeping its dictionary in
-    memory across queries (Dictionary.java:74-79 loads the whole
-    front-coded term file once; every query then binary-searches RAM):
-    per term we cache (df, the ``seed_blocks`` highest-impact blocks
-    WITH payload, per-bucket max impact + block counts, and the doc_len
-    slabs of the seed buckets). All of it is metadata-sized — a few KB
-    per term, independent of corpus size except through bucket count —
-    and, crucially, QUERY-INDEPENDENT (within a term, idf is constant,
-    so impact ORDER needs no weights), which is what makes a cross-query
-    cache sound. Threshold seeding and bucket pruning then run as pure
-    driver numpy over the cache; only the cogroup touches the cluster.
-
-    Cache growth is bounded by ``max_terms`` (FIFO eviction). A miss
-    costs one metadata job for ONLY the missing terms; a fully-warm
-    query costs one job. Results are exactly ``bm25_topk_wand``'s
-    (pytest-locked parity, and both are oracle-locked)."""
-
-    def __init__(
-        self,
-        blocks: DataFrame,
-        slabs: DataFrame,
-        n_docs: int,
-        total_tokens: int,
-        bucket_range: int,
-        block_size: int = 128,
-        k1: float = BM25_K1,
-        b: float = BM25_B,
-        seed_blocks: int = 32,
-        max_terms: int = 100_000,
-    ):
-        self.blocks = blocks
-        self.slabs = slabs
-        self.n_docs = int(n_docs)
-        self.total_tokens = int(total_tokens)
-        self.bucket_range = int(bucket_range)
-        self.block_size = int(block_size)
-        self.k1, self.b = k1, b
-        self.seed_blocks = int(seed_blocks)
-        self.max_terms = int(max_terms)
-        self.avgdl = self.total_tokens / self.n_docs if self.n_docs else 0.0
-        # term -> {"df": int, "seeds": [dict], "mi": {bucket: float}}
-        self._meta: dict[str, dict] = {}
-        self._slab_cache: dict[int, tuple[int, np.ndarray]] = {}
-        self._seed_decoded: dict[tuple[str, int], tuple] = {}
-        self.metadata_jobs = 0  # observability: cold-fill job count
-
-    # ---- cache fill -------------------------------------------------
-    def _ensure_terms(self, terms: list[str]) -> None:
-        missing = [t for t in terms if t not in self._meta]
-        if not missing:
-            return
-        from pyspark.sql.window import Window
-
-        qb = self.blocks.filter(F.col("term").isin(missing))
-        meta_small = qb.select("term", "bucket", "block_id", "max_impact", "n")
-        ranked = meta_small.withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("term").orderBy(
-                    F.desc("max_impact"), F.asc("block_id")
-                )
-            ),
-        ).filter(F.col("rk") <= self.seed_blocks)
-        seed_sel = qb.join(
-            F.broadcast(ranked.select("term", "block_id")),
-            ["term", "block_id"],
-            "left_semi",
-        ).select(
-            F.lit("seed").alias("kind"), "term", "bucket", "n", "max_impact",
-            "first_doc_id", "gaps_ctrl", "gaps_data", "tfs_ctrl", "tfs_data",
-        )
-        slab_sel = self.slabs.join(
-            F.broadcast(ranked.select("bucket").distinct()), "bucket", "left_semi"
-        ).select(F.lit("slab").alias("kind"), "bucket", "base", "lens")
-        ubt_sel = (
-            meta_small.groupBy("bucket", "term")
-            .agg(F.max("max_impact").alias("mi"))
-            .select(F.lit("ubt").alias("kind"), "bucket", "term", "mi")
-        )
-        df_sel = (
-            meta_small.groupBy("term")
-            .agg(F.sum("n").alias("dfv"))
-            .select(F.lit("df").alias("kind"), "term", "dfv")
-        )
-        meta_rows = (
-            seed_sel.unionByName(slab_sel, allowMissingColumns=True)
-            .unionByName(ubt_sel, allowMissingColumns=True)
-            .unionByName(df_sel, allowMissingColumns=True)
-            .collect()
-        )
-        self.metadata_jobs += 1
-        # absent terms must cache too (df=0) or they'd refetch per query
-        for t in missing:
-            self._meta[t] = {"df": 0, "seeds": [], "mi": {}}
-        for r in meta_rows:
-            kind = r["kind"]
-            if kind == "df":
-                self._meta[r["term"]]["df"] = int(r["dfv"])
-            elif kind == "seed":
-                self._meta[r["term"]]["seeds"].append(r.asDict())
-            elif kind == "ubt":
-                self._meta[r["term"]]["mi"][int(r["bucket"])] = float(r["mi"])
-            elif kind == "slab":
-                self._slab_cache[int(r["bucket"])] = (
-                    int(r["base"]),
-                    np.frombuffer(r["lens"], dtype=np.uint32),
-                )
-        # FIFO evict — but never a term the in-flight query needs (a
-        # query wider than max_terms overflows temporarily instead)
-        needed = set(terms)
-        evictable = [t for t in self._meta if t not in needed]
-        while len(self._meta) > self.max_terms and evictable:
-            old = evictable.pop(0)
-            for s in self._meta[old]["seeds"]:
-                self._seed_decoded.pop((old, int(s["first_doc_id"])), None)
-            del self._meta[old]
-
-    def _decode_seed(self, r: dict) -> tuple | None:
-        key = (r["term"], int(r["first_doc_id"]))
-        hit = self._seed_decoded.get(key)
-        if hit is not None:
-            return hit
-        sl = self._slab_cache.get(int(r["bucket"]))
-        if sl is None:
-            return None  # θ only weakens — never over-prunes
-        base, lens = sl
-        gaps = svb_decode(r["gaps_ctrl"], r["gaps_data"], r["n"]).astype(np.int64)
-        ids = np.cumsum(gaps) + (int(r["first_doc_id"]) - 1)
-        tfs = tf_decode(r["tfs_ctrl"], r["tfs_data"], r["n"]).astype(np.float64)
-        dl = lens[ids - base].astype(np.float64)
-        self._seed_decoded[key] = (ids, tfs, dl)
-        return self._seed_decoded[key]
-
-    # ---- query ------------------------------------------------------
-    def search(
-        self,
-        query: list[str],
-        k: int,
-        tombstones=None,
-        min_should_match: int = 1,
-        weights: dict[str, float] | None = None,
-    ) -> list[tuple[int, float]]:
-        """``tombstones``: per-query deleted-doc set (same semantics as
-        bm25_topk_wand) — the cached per-term metadata is tombstone-
-        independent (seeds/impacts/dfs describe the on-disk index), so
-        deletes compose with a warm cache: filtering happens at θ-seed
-        time and in the cogroup mask only. ``min_should_match``: m-of-n
-        matching, same exactness argument as bm25_topk_wand (θ seeded
-        only from observed-≥m docs; chunk gate unchanged). ``weights``:
-        per-term ^N boosts, folded into idf (the cached per-term
-        metadata is weight-independent — raw max_impacts — so boosts
-        compose with a warm cache)."""
-        terms = sorted({t.lower() for t in query})
-        if not 1 <= min_should_match <= max(len(terms), 1):
-            raise ValueError(
-                f"min_should_match {min_should_match} out of [1, {len(terms)}] "
-                f"for query terms {terms}"
-            )
-        if not terms or self.n_docs == 0:
-            return []
-        wts = _norm_weights(weights, terms)
-        tomb = _tomb_array(tombstones)
-        tomb_set = set(tomb.tolist()) if tomb is not None else None
-        self._ensure_terms(terms)
-        idf = {
-            t: wts.get(t, 1.0) * math.log(
-                (self.n_docs - self._meta[t]["df"] + 0.5)
-                / (self._meta[t]["df"] + 0.5)
-                + 1.0
-            )
-            for t in terms
-            if self._meta[t]["df"] > 0
-        }
-        if len(idf) < min_should_match or not idf:
-            return []
-
-        # threshold seed from the cached per-term pools (same rule as
-        # bm25_topk_wand_batch: pool by idf·max_impact, take the global
-        # top seed_blocks, accumulate in sorted-term order)
-        pool = [
-            (idf[t] * float(r["max_impact"]), r)
-            for t in idf
-            for r in self._meta[t]["seeds"]
-        ]
-        pool.sort(key=lambda x: (-x[0], x[1]["term"], int(x[1]["first_doc_id"])))
-        acc: dict[int, float] = {}
-        cnt: dict[int, int] = {}
-        for _, r in sorted(pool[: self.seed_blocks], key=lambda x: x[1]["term"]):
-            dec = self._decode_seed(r)
-            if dec is None:
-                continue
-            ids, tfs, dl = dec
-            w = idf[r["term"]]
-            contrib = _contrib(w, tfs, dl, self.avgdl, self.k1, self.b)
-            for d, c in zip(ids.tolist(), contrib.tolist()):
-                acc[d] = acc.get(d, 0.0) + c
-                cnt[d] = cnt.get(d, 0) + 1
-        if min_should_match > 1:
-            acc = {d: v for d, v in acc.items() if cnt[d] >= min_should_match}
-        if tomb_set is not None:
-            acc = {d: v for d, v in acc.items() if d not in tomb_set}
-        theta = -math.inf
-        if len(acc) >= k:
-            kth = float(
-                np.partition(np.fromiter(acc.values(), dtype=np.float64), -k)[-k]
-            )
-            theta = kth - abs(kth) * 1e-9 - 1e-300
-
-        # bucket pruning over cached per-(term,bucket) max impacts
-        ub_by_bucket: dict[int, float] = {}
-        for t in idf:
-            w = idf[t]
-            for bkt, mi in self._meta[t]["mi"].items():
-                ub_by_bucket[bkt] = ub_by_bucket.get(bkt, 0.0) + w * mi
-        surviving = [bkt for bkt, ub in ub_by_bucket.items() if ub >= theta]
-        if not surviving:
-            return []
-
-        qblocks = self.blocks.filter(F.col("term").isin(sorted(idf)))
-        return _single_query_cogroup(
-            self.blocks, self.slabs, qblocks, surviving, idf, theta, k,
-            self.avgdl, self.k1, self.b, self.bucket_range, self.block_size,
-            tomb=tomb, msm=min_should_match,
-        )

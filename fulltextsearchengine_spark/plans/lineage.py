@@ -28,6 +28,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import hadoopfs
+
 
 def _checksum_agg():
     """Order-insensitive per-file checksum: sum of xxhash64 in decimal
@@ -46,26 +48,6 @@ class StageRunner:
         self.ran: list[str] = []  # stages actually executed this run
         self.skipped: list[str] = []  # stages resumed from checkpoint
 
-    # -- fs helpers via Hadoop (works for local and distributed FS) ------
-    def _fs(self):
-        jvm = self.spark.sparkContext._jvm
-        hconf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        return jvm.org.apache.hadoop.fs.FileSystem.get(hconf), jvm
-
-    def _exists(self, path: str) -> bool:
-        fs, jvm = self._fs()
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
-
-    def _touch(self, path: str) -> None:
-        fs, jvm = self._fs()
-        fs.create(jvm.org.apache.hadoop.fs.Path(path), True).close()
-
-    def _write_text(self, path: str, text: str) -> None:
-        fs, jvm = self._fs()
-        out = fs.create(jvm.org.apache.hadoop.fs.Path(path), True)
-        out.write(bytearray(text.encode()))
-        out.close()
-
     # -- the stage protocol ---------------------------------------------
     def stage(self, name: str, fn: Callable[[SparkSession], DataFrame]) -> DataFrame:
         """Run (or resume) a named stage. ``fn`` produces the stage
@@ -73,7 +55,7 @@ class StageRunner:
         On resume the parquet is read back instead of recomputing."""
         d = f"{self.base}/{name}"
         marker = f"{d}/_STAGE_DONE"
-        if self._exists(marker):
+        if hadoopfs.exists(self.spark, marker):
             self.skipped.append(name)
             return self.spark.read.parquet(f"{d}/data")
 
@@ -103,8 +85,8 @@ class StageRunner:
             "rows": agg["rows"] or 0,
             "files": agg["files"],
         }
-        self._write_text(f"{d}/metrics.json", json.dumps(metrics))
-        self._touch(marker)
+        hadoopfs.write_bytes(self.spark, f"{d}/metrics.json", json.dumps(metrics).encode())
+        hadoopfs.write_bytes(self.spark, marker, b"")
         self.ran.append(name)
         return data
 
@@ -128,15 +110,9 @@ class StageRunner:
 
     def metrics(self) -> list[dict]:
         out = []
-        fs, jvm = self._fs()
         for name in self.ran + self.skipped:
-            p = jvm.org.apache.hadoop.fs.Path(f"{self.base}/{name}/metrics.json")
-            if fs.exists(p):
-                stream = fs.open(p)
-                try:
-                    raw = bytes(stream.readAllBytes())
-                finally:
-                    stream.close()
+            raw = hadoopfs.read_bytes(self.spark, f"{self.base}/{name}/metrics.json")
+            if raw is not None:
                 out.append(json.loads(raw.decode()))
         return out
 

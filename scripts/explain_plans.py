@@ -87,17 +87,32 @@ def main() -> None:
         .write.mode("overwrite").parquet(f"{wd}/wandidx/slabs")
     wblocks = spark.read.parquet(f"{wd}/wandidx/blocks")
     wslabs = spark.read.parquet(f"{wd}/wandidx/slabs")
+    # a cold query: hook = [fill metadata scan, fill payload scan, scoring pass]
     hook: list = []
     bm25_topk_wand(
         wblocks, wslabs, ["spark", "join", "fast"], 10,
         n_docs=st["num_docs"], total_tokens=st["total_tokens"],
         bucket_range=256, block_size=64, explain_out=hook,
     )
-    p = grab_plan(hook[0])
     sections.append((
-        "BM25 WAND serving (blocks+slabs only, docs table untouched)", p,
-        ["wandidx/blocks", "wandidx/slabs", "In(bucket", "FlatMapCoGroupsInPandas",
+        "WAND fill, job 1 — metadata-only scan (no exchange, no payload columns)",
+        grab_plan(hook[0]),
+        ["wandidx/blocks", "PushedFilters: [In(term", "!Exchange", "!gaps_ctrl",
+         "!gaps_data", "!tfs_ctrl", "!tfs_data", "!wandidx/slabs", "!/index/docs"],
+    ))
+    sections.append((
+        "WAND fill, job 2 — seed payload ∪ seed slabs in one scan (no exchange)",
+        grab_plan(hook[1]),
+        ["wandidx/blocks", "wandidx/slabs", "Union", "!Exchange", "!Join",
          "!/index/docs"],
+    ))
+    sections.append((
+        "BM25 WAND serving (one bucket exchange, blocks+slabs only, docs table untouched)",
+        grab_plan(hook[-1]),
+        ["wandidx/blocks", "wandidx/slabs", "In(bucket", "=1:FlatMapGroupsInPandas",
+         "=1:Exchange hashpartitioning(bucket", "=1:Exchange",
+         "!FlatMapCoGroupsInPandas", "!/index/docs", "!SortMergeJoin",
+         "!BroadcastNestedLoopJoin"],
     ))
 
     from fulltextsearchengine_spark.operators.dedup import minhash_lsh_pairs
@@ -546,7 +561,7 @@ def main() -> None:
     ))
 
     # Round-4: tombstoned WAND — the deleted-doc set rides into the Arrow
-    # cogroup worker as a driver-side numpy array (deletes are ~0.01% of
+    # kernel worker as a driver-side numpy array (deletes are ~0.01% of
     # corpus), so the plan must be IDENTICAL to untombstoned WAND: same
     # blocks+slabs scans, no extra join/exchange, docs table untouched.
     hook_t: list = []
@@ -556,10 +571,11 @@ def main() -> None:
         bucket_range=256, block_size=64, explain_out=hook_t,
         tombstones=[1, 2, 3],
     )
-    p = grab_plan(hook_t[0])
+    p = grab_plan(hook_t[-1])
     sections.append((
-        "Tombstoned WAND (delete set enters the cogroup closure — no extra join)", p,
-        ["wandidx/blocks", "wandidx/slabs", "FlatMapCoGroupsInPandas",
+        "Tombstoned WAND (delete set enters the kernel closure — no extra join)", p,
+        ["wandidx/blocks", "wandidx/slabs", "=1:FlatMapGroupsInPandas",
+         "=1:Exchange hashpartitioning(bucket", "=1:Exchange", "!Join",
          "!/index/docs", "!SortMergeJoin", "!BroadcastNestedLoopJoin"],
     ))
 
@@ -966,8 +982,15 @@ def main() -> None:
     for title, plan, must in sections:
         checks = []
         for m in must:
-            # "!X" asserts absence (e.g. no per-row Python in the plan)
-            ok = (m[1:] not in plan) if m.startswith("!") else (m in plan)
+            # "!X" asserts absence (e.g. no per-row Python in the plan);
+            # "=N:X" asserts exactly N operator lines containing X in the
+            # initial plan (an executed adaptive plan prints final + initial)
+            if m.startswith("="):
+                n, x = m[1:].split(":", 1)
+                initial = plan.split("--- simple ---")[-1].split("== Initial Plan ==")[-1]
+                ok = initial.count(x) == int(n)
+            else:
+                ok = (m[1:] not in plan) if m.startswith("!") else (m in plan)
             checks.append(f"- {'✓' if ok else '✗ MISSING'} `{m}`")
             if not ok:
                 failures.append((title, m))

@@ -26,10 +26,10 @@ fixed it at 2^19, which left only 58 buckets at 30M docs and measured
 bucket-skip degrading to 0.307 with 5.44 s/query; ~512 buckets keeps
 bucket-level pruning scale-invariant. Override with argv[3].
 
-Warm serving at 100× (verdict r4 #7): besides the cold two-job WAND
+Warm serving at 100× (verdict r4 #7): besides the cold four-job WAND
 path, this also measures the serving-tier shapes at the big corpus —
-the warm ``WandSearcher`` (per-term metadata cached, ONE Spark job per
-query) and the driver-side ``ShardedBM25`` router (4 doc-range shards,
+the warm ``WandSearcher`` (per-term metadata cached, TWO Spark jobs per
+query: the one-exchange scoring pass) and the driver-side ``ShardedBM25`` router (4 doc-range shards,
 ms-scale, zero jobs once warm) — so the ms-scale serving story has a
 30M-doc datapoint, not just 300k.
 
@@ -186,7 +186,8 @@ def main() -> None:
 
     # Warm serving at 100× (verdict r4 #7) — the two serving-tier shapes.
     # (a) WandSearcher: per-term metadata cached after first touch; each
-    # warm query is exactly ONE Spark job over the surviving buckets.
+    # warm query is exactly TWO Spark jobs (one exchange) over the
+    # surviving buckets.
     from fulltextsearchengine_spark.operators.wand import WandSearcher
 
     wsearch = WandSearcher(

@@ -43,3 +43,24 @@ def sf001_docs_tokens(spark):
     return with_token_counts(
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     )
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """count_jobs(fn) -> (fn(), number of Spark jobs fn ran), read from
+    the status tracker under a job group unique to the call."""
+    import itertools
+
+    sc = spark.sparkContext
+    seq = itertools.count()
+
+    def run(fn):
+        group = f"count-jobs-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -12,6 +12,7 @@ import pytest
 
 from fulltextsearchengine_spark import oracle
 from fulltextsearchengine_spark.operators.index_build import build_index
+from fulltextsearchengine_spark.operators.local_query import LocalBM25
 from fulltextsearchengine_spark.operators.posting_blocks import (
     build_posting_blocks,
     blocks_to_postings,
@@ -75,6 +76,7 @@ def test_wand_matches_oracle(ctx):
         sorted(golden["term_to_document_frequency"])[:3],
         sorted(golden["term_to_document_frequency"])[10:15],
         [sorted(golden["term_to_document_frequency"])[0], "zzznotaword"],
+        [sorted(golden["term_to_document_frequency"])[1], "it's", "back\\slash"],  # SQL-quoted
     ]
     from fulltextsearchengine_spark.operators.posting_blocks import build_doc_len_slabs
 
@@ -159,8 +161,6 @@ def test_blockmax_kernel_matches_oracle(ctx):
 def test_local_bm25_server(ctx):
     """LocalBM25 (driver-side serving path) matches the oracle exactly,
     including cache-warm repeat queries and OOV terms."""
-    from fulltextsearchengine_spark.operators.local_query import LocalBM25
-
     from fulltextsearchengine_spark.operators.posting_blocks import build_doc_len_slabs
 
     golden, idx, blocks, stats = ctx
@@ -180,6 +180,47 @@ def test_local_bm25_server(ctx):
             assert [g[0] for g in got] == [e[0] for e in exp], q
             for e, g in zip(exp, got):
                 assert g[1] == pytest.approx(e[1], rel=1e-9)
+
+
+def test_local_and_sharded_ties_across_buckets(spark):
+    """A tie at the k-th score that spans buckets. The bucket holding
+    the one stronger doc has the highest bound, so it is scanned first
+    and fills the heap with its own tied docs; every other bucket's
+    bound equals the k-th score yet holds tied docs with smaller
+    doc_ids, so it must still be scanned (score desc, doc_id asc)."""
+    import pandas as pd
+
+    from fulltextsearchengine_spark.operators.posting_blocks import build_doc_len_slabs
+    from fulltextsearchengine_spark.operators.sharding import ShardedBM25
+
+    bucket_range = 16
+    texts = ["tieterm fill fill"] * 64
+    texts[20] = "tieterm tieterm fill"  # doc 21, in bucket 1
+    pdf = pd.DataFrame({
+        "conv_id": "c", "turn_idx": range(64), "role": "user", "text": texts,
+        "tool": None, "ts": pd.Timestamp("2024-01-01"),
+    })
+    golden = oracle.build_index(pdf)
+    exp = oracle.bm25_search(golden, ["tieterm"], 10)
+    assert [d for d, _ in exp] == [21, *range(1, 10)]
+    idx = build_index(spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA))
+    stats = idx.stats_row()
+    blocks = build_posting_blocks(
+        idx.postings, avgdl=stats["total_tokens"] / stats["num_docs"],
+        block_size=BLOCK_SIZE, bucket_range=bucket_range,
+    ).cache()
+    slabs = build_doc_len_slabs(idx.docs.select("doc_id", "doc_len"), bucket_range).cache()
+    args = (blocks, slabs, stats["num_docs"], stats["total_tokens"],
+            dict(golden["term_to_document_frequency"]))
+    tiers = {
+        "local": LocalBM25(*args, bucket_range=bucket_range),
+        "sharded": ShardedBM25(*args, bucket_range=bucket_range, n_shards=2),
+    }
+    for name, tier in tiers.items():
+        got = tier.search(["tieterm"], 10)
+        assert [d for d, _ in got] == [d for d, _ in exp], name
+        for e, g in zip(exp, got):
+            assert g[1] == pytest.approx(e[1], rel=1e-9)
 
 
 def test_wand_batch_matches_single_and_oracle(ctx):
@@ -245,7 +286,7 @@ def test_sharded_bm25_router_matches_single(ctx):
 
 def test_wand_searcher_warm_cache(ctx):
     """WandSearcher: rank/score-identical to bm25_topk_wand and the
-    oracle; warm repeats refetch NO metadata (one cogroup job only);
+    oracle; warm repeats refetch NO metadata (scoring pass only);
     OOV-only and partially-OOV queries behave; eviction stays sound."""
     from fulltextsearchengine_spark.operators.posting_blocks import build_doc_len_slabs
     from fulltextsearchengine_spark.operators.wand import WandSearcher

@@ -90,6 +90,22 @@ def test_timeslice_load_roundtrip(spark, tsi, searcher):
     assert a == b
 
 
+def test_timeslice_load_runs_no_job(spark, searcher, tmp_path, count_jobs):
+    """meta.json is read through the Hadoop FS and the tables open with
+    their recorded schemas, so load() starts no Spark job. Month slices
+    keep the partition count under Spark's parallel-listing threshold
+    (32 directories), past which listing itself runs as a job."""
+    path = str(tmp_path / "tsmonth")
+    built = TimeSlicedIndex.build(searcher.index, path, granularity="month")
+    assert sorted(p.name for p in (tmp_path / "tsmonth" / "_timeslice_meta").iterdir()
+                  if not p.name.startswith(".")) == ["meta.json"]
+    again, jobs = count_jobs(lambda: TimeSlicedIndex.load(spark, path))
+    assert jobs == 0
+    assert again.granularity == "month"
+    assert again.postings.schema == built.postings.schema
+    assert again.stats.collect() == built.stats.collect()
+
+
 def test_bad_granularity_raises(searcher):
     with pytest.raises(ValueError):
         TimeSlicedIndex.build(searcher.index, "/tmp/never", granularity="fortnight")
