@@ -685,15 +685,12 @@ def main() -> None:
         repeat=reps,
     )
 
-    # r1 pipeline variants for comparison: explode+groupBy with the
-    # Arrow tokenizer (the old fast path) and with the pure-Catalyst
-    # tokenizer; the headline index_build_sfdir is the map-side-invert
-    # single-shuffle pipeline (see build_and_save_index docstring)
+    # the same build with the Arrow pandas-UDF tokenizer (the r1 fast
+    # path); the headline index_build_sfdir uses the pure-Catalyst
+    # tokenizer — both run explode + groupBy (build_and_save_index)
     timed(
         "index_build_sfdir_pandas_udf",
-        lambda: build_and_save_index(
-            t, f"{workdir}/index_pudf", use_pandas_tokenizer=True, map_side_invert=False
-        ),
+        lambda: build_and_save_index(t, f"{workdir}/index_pudf", use_pandas_tokenizer=True),
     )
     timed(
         "bm25_batch_30q",

@@ -69,39 +69,6 @@ def tokenize_pandas_udf(s: pd.Series) -> pd.Series:
     return tokenize_texts(s)
 
 
-_TERM_TF_TYPE = T.StructType(
-    [
-        T.StructField("doc_len", T.LongType()),
-        T.StructField(
-            "pairs",
-            T.ArrayType(
-                T.StructType(
-                    [T.StructField("term", T.StringType()), T.StructField("tf", T.LongType())]
-                )
-            ),
-        ),
-    ]
-)
-
-
-@pandas_udf(_TERM_TF_TYPE)
-def term_freqs_pandas_udf(s: pd.Series) -> pd.DataFrame:
-    """Tokenize + per-doc tf count in ONE Arrow pass: returns
-    (doc_len, [(term, tf)...]) per text. This is the reference's per-doc
-    invert (parsing/Review.java:93-100, tokenToFreq via groupingBy) done
-    map-side — the downstream pipeline needs no (term, doc_id) groupBy
-    shuffle at all, only the final layout repartition."""
-    from collections import Counter
-
-    doc_lens: list[int] = []
-    pairs: list[list[tuple[str, int]]] = []
-    for toks in s.fillna("").str.findall(_TOKEN_FINDALL):
-        c = Counter(t.lower() for t in toks)
-        doc_lens.append(sum(c.values()))
-        pairs.append(sorted(c.items()))  # term-sorted, deterministic layout
-    return pd.DataFrame({"doc_len": doc_lens, "pairs": pairs})
-
-
 # DuckDB-SQL equivalent of tokens_col, for oracle queries. `{col}` is the
 # text column expression. Produces a list of lowercased tokens.
 TOKENS_SQL = (

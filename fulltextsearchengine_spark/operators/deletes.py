@@ -37,10 +37,12 @@ keeps them with ``n_docs`` as the non-contiguity audit field.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .index_build import InvertedIndex
+from .index_build import InvertedIndex, derive_index
 
 
 def tombstones_for_convs(index: InvertedIndex, conv_ids: list[str]) -> DataFrame:
@@ -75,52 +77,30 @@ def purge_deletes(
     """Fold tombstones into the index tables (the Lucene merge step).
 
     Returns a logical InvertedIndex over the surviving rows; persist it
-    with ``save_index`` to make the purge durable. ``terms`` and
-    ``stats`` are recomputed from surviving postings (same aggregation
-    as build A4/A6 — df/cf now reflect the post-delete corpus), and
-    ``conv_ranges`` from surviving docs. With ``allow_partial_convs``
-    False (default) conv_ranges keeps only convs whose full span
-    survived (whole-conv deletes: a no-op; per-doc deletes: broken rows
-    dropped so ``sequence``-expansion stays sound). True keeps every
-    conv with ``n_docs`` as the non-contiguity audit field.
+    with ``write_index(idx.postings, idx.docs, path)`` to make the purge
+    durable. ``terms``, ``conv_ranges`` and ``stats`` are re-derived from
+    the surviving rows by the build's own functions (``derive_index``),
+    so df/cf now reflect the post-delete corpus. With
+    ``allow_partial_convs`` False (default) conv_ranges keeps only convs
+    whose full span survived (whole-conv deletes: a no-op; per-doc
+    deletes: broken rows dropped so ``sequence``-expansion stays sound).
+    True keeps every conv with ``n_docs`` as the non-contiguity audit
+    field.
     """
     tomb = F.broadcast(tombstones.select("doc_id").distinct())
-    postings = index.postings.join(tomb, "doc_id", "left_anti")
-    docs = index.docs.join(tomb, "doc_id", "left_anti")
-    terms = postings.groupBy("term").agg(
-        F.count("*").alias("df"), F.sum("tf").alias("cf")
+    purged = derive_index(
+        docs=index.docs.join(tomb, "doc_id", "left_anti"),
+        postings=index.postings.join(tomb, "doc_id", "left_anti"),
     )
-    conv_ranges = docs.groupBy("conv_id").agg(
-        F.min("doc_id").alias("from_doc_id"),
-        F.max("doc_id").alias("to_doc_id"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-    if not allow_partial_convs:
-        # whole-conv contract: every surviving conv keeps its full span,
-        # so n_docs == span everywhere; a violation means the caller
-        # passed per-doc tombstones — keep conv_ranges sequence-safe by
-        # dropping the broken rows only when explicitly allowed.
-        conv_ranges = conv_ranges.filter(
+    if allow_partial_convs:
+        return purged
+    # whole-conv contract: every surviving conv keeps its full span, so
+    # n_docs == span everywhere; a violation means the caller passed
+    # per-doc tombstones — drop the broken rows to keep conv_ranges
+    # sequence-safe.
+    return replace(
+        purged,
+        conv_ranges=purged.conv_ranges.filter(
             F.col("n_docs") == F.col("to_doc_id") - F.col("from_doc_id") + F.lit(1)
-        )
-    stats = (
-        docs.agg(
-            F.sum("doc_len").alias("total_tokens"),
-            F.count(F.lit(1)).alias("num_docs"),
-            F.avg("doc_len").alias("avg_doc_len"),
-        )
-        .crossJoin(
-            terms.agg(
-                F.count(F.lit(1)).alias("unique_terms"),
-                F.sum("df").alias("num_pairs"),
-            )
-        )
-        .select("total_tokens", "unique_terms", "num_docs", "num_pairs", "avg_doc_len")
-    )
-    return InvertedIndex(
-        docs=docs,
-        postings=postings,
-        terms=terms,
-        conv_ranges=conv_ranges,
-        stats=stats,
+        ),
     )

@@ -6,7 +6,7 @@ A Spark job has a ~100 ms scheduling floor, so for *serving* (as opposed
 to analytical scoring over the whole corpus) the engine mirrors the
 reference's design: posting BLOCKS are fetched once per term (one pruned
 parquet/DataFrame read — the disk-seek analog), cached in memory, and
-scored with the numpy block-max kernel (wand.py) in microseconds.
+scored with a numpy block-max kernel in microseconds.
 
 At 100 TB this object is what each SERVING SHARD holds: blocks for its
 term range, doc_len slab for its doc range; a router fans out and
@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .posting_blocks import decode_block
-from .wand import BM25_B, BM25_K1, bm25_topk_wand_blockmax, topk_select
+from .wand import BM25_B, BM25_K1, topk_select
 
 _BLOCK_COLS = [
     "term", "bucket", "block_id", "n", "first_doc_id", "last_doc_id",
@@ -217,17 +217,3 @@ class LocalBM25:
                 elif item > heap[0]:
                     heapq.heapreplace(heap, item)
         return [(-nd, s) for s, nd in sorted(heap, key=lambda x: (-x[0], -x[1]))]
-
-    def search_uncached(self, query: list[str], k: int) -> list[tuple[int, float]]:
-        """Cold-path variant: per-block decode each call (the property-
-        tested kernel) — what a cache-miss costs."""
-        terms = sorted({t.lower() for t in query})
-        idf = {t: w for t in terms if (w := self.idf(t)) is not None}
-        if not idf:
-            return []
-        bpdf = self._fetch_blocks(sorted(idf))
-        if bpdf.empty:
-            return []
-        return bm25_topk_wand_blockmax(
-            bpdf, self.doc_lens, idf, k, avgdl=self.avgdl, k1=self.k1, b=self.b
-        )

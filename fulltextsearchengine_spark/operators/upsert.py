@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .index_build import InvertedIndex, build_index
+from .index_build import DOC_COLS, POSTING_COLS, InvertedIndex, build_index
 
 
 def upsert_conversations(
@@ -61,15 +61,9 @@ def upsert_conversations(
         "doc_id", F.col("doc_id") + F.lit(offset)
     )
 
-    d_all = kept_docs.select(
-        "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "doc_len"
-    ).unionByName(
-        delta_docs.select(
-            "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "doc_len"
-        )
-    )
-    p_all = kept_postings.select("term", "doc_id", "tf", "doc_len").unionByName(
-        delta_postings.select("term", "doc_id", "tf", "doc_len")
+    d_all = kept_docs.select(*DOC_COLS).unionByName(delta_docs.select(*DOC_COLS))
+    p_all = kept_postings.select(*POSTING_COLS).unionByName(
+        delta_postings.select(*POSTING_COLS)
     )
 
     from ..streaming.stream_index import _fold

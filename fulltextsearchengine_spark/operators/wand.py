@@ -54,7 +54,6 @@ DataFrame path + DuckDB oracle in tests and the correctness gate.
 
 from __future__ import annotations
 
-import heapq
 import math
 from typing import NamedTuple
 
@@ -688,62 +687,3 @@ def bm25_topk_wand_batch(
         blocks, slabs, n_docs, total_tokens, bucket_range, block_size, k1, b, seed_blocks
     )
     return ws.search_batch(queries, k, tombstones, min_should_match, term_stats)
-
-
-def bm25_topk_wand_blockmax(
-    blocks_pdf: pd.DataFrame,
-    doc_lens: np.ndarray,
-    idf: dict[str, float],
-    k: int,
-    avgdl: float,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> list[tuple[int, float]]:
-    """Single-partition block-max scorer with explicit block skipping —
-    the kernel used for serving (local_query.py), skip-rate
-    micro-benchmarks (bench.py) and property tests. ``doc_lens`` is
-    indexed by doc_id (1-based slot 0 unused). Blocks must be
-    doc_id-ascending per term (block_id order).
-
-    Processes doc-ranges in ascending order; before decoding the blocks
-    overlapping a range, checks Σ idf·max_impact against the running
-    k-th-best score and skips the whole range when it can't qualify."""
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
-
-    def threshold() -> float:
-        return heap[0][0] if len(heap) >= k else -math.inf
-
-    # iterate doc-range buckets ascending; fully-vectorized per bucket:
-    # decode blocks → np.add.at into a dense doc-range slab (no per-
-    # posting Python), then bounded top-k selection updates the heap.
-    for bucket, grp in blocks_pdf.groupby("bucket", sort=True):
-        per_term_max: dict[str, float] = {}
-        for term, w_imp in zip(grp["term"].to_numpy(), grp["max_impact"].to_numpy()):
-            w = idf.get(term)
-            if w is None:
-                continue
-            per_term_max[term] = max(per_term_max.get(term, 0.0), w * float(w_imp))
-        if sum(per_term_max.values()) < threshold():
-            continue  # block-max skip: no doc here can beat the k-th score
-        base = int(grp["first_doc_id"].min())
-        span = int(grp["last_doc_id"].max()) - base + 1
-        acc = np.zeros(span, dtype=np.float64)
-        touched = np.zeros(span, dtype=bool)
-        for term, trows in grp.groupby("term", sort=True):
-            w = idf.get(term)
-            if w is None:
-                continue
-            for row in trows.itertuples(index=False):
-                ids, tfs = decode_block(row)
-                # ids unique per block
-                acc[ids - base] += _contrib(w, tfs, doc_lens[ids], avgdl, k1, b)
-                touched[ids - base] = True
-        cand = np.nonzero(touched)[0]
-        cand, scores = topk_select(cand, acc[cand], k)
-        for d, s in zip((cand + base).tolist(), scores.tolist()):
-            item = (s, -d)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-    return [(-nd, s) for s, nd in sorted(heap, key=lambda x: (-x[0], -x[1]))]

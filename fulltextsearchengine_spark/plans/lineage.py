@@ -3,24 +3,30 @@
 The reference "resumes" nothing — IndexWriter wipes its output directory
 and rebuilds from scratch (IndexWriter.java:40). The north_rule demands
 better: every build stage persists its output plus a lineage table, and
-a re-run skips stages whose outputs already exist (resume from
-checkpoint). Because the reference has no streaming semantics
+a re-run skips stages already built with the same parameters (resume
+from checkpoint). Because the reference has no streaming semantics
 (SURVEY.md §2.9), "checkpoint" here means staged batch jobs with
 persisted intermediate tables — exactly the SPIMI temp-index pattern
 (spimi/SPIMIIndexer.java:35-50) promoted to durable, skippable stages.
 
 Per stage we record:
-- ``<base>/<stage>/data/``      — the output parquet
+- ``<base>/<stage>/data/``      — the output parquet (zstd)
 - ``<base>/<stage>/lineage/``   — one row per output FILE (the unit of
   partition-parallel work): (stage, file, rows, checksum) where checksum
-  = sum of xxhash64 over all columns — cheap, order-insensitive, catches
-  silent corruption on resume;
+  = sum of xxhash64 over all columns — cheap, order-insensitive;
+  ``verify_lineage`` re-hashes a stage against it to catch silent
+  corruption;
 - ``<base>/<stage>/metrics.json`` — wall_ms, rows, files;
-- ``<base>/<stage>/_STAGE_DONE`` — the resume marker, written last.
+- ``<base>/<stage>/_STAGE_DONE`` — the resume marker, written last. It
+  holds the stage's fingerprint: a hash of its parameters and of the
+  fingerprints of the stages it reads. A stage resumes only when the
+  fingerprint matches, so a changed parameter re-runs that stage and,
+  through the chained fingerprints, everything downstream of it.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import time
 from collections.abc import Callable
@@ -29,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import hadoopfs
+from ..operators import index_build as ib
 
 
 def _checksum_agg():
@@ -41,41 +48,58 @@ def _checksum_agg():
     )
 
 
+def _lineage(data: DataFrame) -> DataFrame:
+    """(file, rows, checksum) per output file of ``data``."""
+    return (
+        data.select(F.input_file_name().alias("file"), F.xxhash64(*data.columns).alias("h"))
+        .groupBy("file")
+        .agg(F.count(F.lit(1)).alias("rows"), _checksum_agg())
+    )
+
+
 class StageRunner:
     def __init__(self, spark: SparkSession, base: str):
         self.spark = spark
         self.base = base.rstrip("/")
         self.ran: list[str] = []  # stages actually executed this run
         self.skipped: list[str] = []  # stages resumed from checkpoint
+        self.fingerprints: dict[str, str] = {}
 
     # -- the stage protocol ---------------------------------------------
-    def stage(self, name: str, fn: Callable[[SparkSession], DataFrame]) -> DataFrame:
+    def stage(
+        self,
+        name: str,
+        fn: Callable[[SparkSession], DataFrame],
+        params: dict | None = None,
+        reads: tuple[str, ...] = (),
+    ) -> DataFrame:
         """Run (or resume) a named stage. ``fn`` produces the stage
         output DataFrame; it is materialized to parquet with lineage.
-        On resume the parquet is read back instead of recomputing."""
+        ``params`` (JSON-serializable) and ``reads`` (the names of the
+        earlier stages ``fn`` reads) make up the stage's fingerprint. On
+        resume — marker present, same fingerprint — the parquet is read
+        back instead of recomputing."""
         d = f"{self.base}/{name}"
         marker = f"{d}/_STAGE_DONE"
-        if hadoopfs.exists(self.spark, marker):
+        fp = hashlib.sha256(
+            json.dumps(
+                [name, params or {}, [self.fingerprints[r] for r in reads]], sort_keys=True
+            ).encode()
+        ).hexdigest()
+        self.fingerprints[name] = fp
+        if hadoopfs.read_bytes(self.spark, marker) == fp.encode():
             self.skipped.append(name)
             return self.spark.read.parquet(f"{d}/data")
 
+        # a stale marker must not outlive the data it described
+        hadoopfs.delete(self.spark, marker)
         t0 = time.perf_counter()
         out = fn(self.spark)
-        out.write.mode("overwrite").parquet(f"{d}/data")
+        out.write.mode("overwrite").option("compression", ib.PARQUET_CODEC).parquet(f"{d}/data")
         data = self.spark.read.parquet(f"{d}/data")
-
-        cols = data.columns
-        lineage = (
-            data.select(
-                F.input_file_name().alias("file"),
-                F.xxhash64(*cols).alias("h"),
-            )
-            .groupBy("file")
-            .agg(F.count(F.lit(1)).alias("rows"), _checksum_agg())
-            .withColumn("stage", F.lit(name))
-            .select("stage", "file", "rows", "checksum")
-        )
-        lineage.write.mode("overwrite").parquet(f"{d}/lineage")
+        _lineage(data).withColumn("stage", F.lit(name)).select(
+            "stage", "file", "rows", "checksum"
+        ).write.mode("overwrite").option("compression", ib.PARQUET_CODEC).parquet(f"{d}/lineage")
 
         lin = self.spark.read.parquet(f"{d}/lineage")
         agg = lin.agg(F.sum("rows").alias("rows"), F.count(F.lit(1)).alias("files")).collect()[0]
@@ -86,7 +110,7 @@ class StageRunner:
             "files": agg["files"],
         }
         hadoopfs.write_bytes(self.spark, f"{d}/metrics.json", json.dumps(metrics).encode())
-        hadoopfs.write_bytes(self.spark, marker, b"")
+        hadoopfs.write_bytes(self.spark, marker, fp.encode())
         self.ran.append(name)
         return data
 
@@ -94,17 +118,13 @@ class StageRunner:
         """Re-hash a stage's data and compare against its recorded
         lineage — detects post-checkpoint corruption before resuming."""
         d = f"{self.base}/{name}"
-        data = self.spark.read.parquet(f"{d}/data")
         recorded = {
             r["file"]: (r["rows"], r["checksum"])
             for r in self.spark.read.parquet(f"{d}/lineage").collect()
         }
         current = {
             r["file"]: (r["rows"], r["checksum"])
-            for r in data.select(F.input_file_name().alias("file"), F.xxhash64(*data.columns).alias("h"))
-            .groupBy("file")
-            .agg(F.count(F.lit(1)).alias("rows"), _checksum_agg())
-            .collect()
+            for r in _lineage(self.spark.read.parquet(f"{d}/data")).collect()
         }
         return recorded == current
 
@@ -124,16 +144,14 @@ def build_index_checkpointed(
     block_size: int = 128,
     bucket_range: int | None = None,
 ):
-    """The full staged build: docs → postings → terms → stats → blocks,
-    each stage persisted + lineage-tracked + resumable. Returns
+    """The full staged build: postings → docs → terms → conv_ranges →
+    stats → blocks, each stage persisted + lineage-tracked + resumable.
+    The five index tables are the ones ``build_and_save_index`` writes,
+    from the same derivations (operators/index_build.py). Returns
     (InvertedIndex over the persisted tables, blocks DataFrame, runner).
     """
-    from pyspark.sql import functions as F
-
-    from ..functions.tokenize import tokens_col
     from ..operators.docid import assign_doc_ids
-    from ..operators.index_build import InvertedIndex
-    from ..operators.posting_blocks import build_posting_blocks
+    from ..operators.posting_blocks import auto_bucket_range, build_posting_blocks
 
     runner = StageRunner(spark, index_path)
     _cache: dict = {}
@@ -144,75 +162,33 @@ def build_index_checkpointed(
         # that scan it); a fully-resumed run never evaluates this.
         if "turns" not in _cache:
             with_ids = assign_doc_ids(transcripts)
-            _cache["persisted"] = getattr(with_ids, "_ftse_persisted", None)
-            _cache["turns"] = with_ids.withColumn(
-                "tokens", tokens_col(F.col("text"))
-            ).withColumn("doc_len", F.size("tokens").cast("long"))
+            _cache["persisted"] = with_ids._ftse_persisted
+            _cache["turns"] = ib.tokenize_turns(with_ids)
         return _cache["turns"]
 
     # downstream stages chain from PERSISTED stage outputs — a stage
     # re-run recomputes only itself, never the tokenize/docID lineage
-    postings = runner.stage(
-        "postings",
-        lambda s: (
-            turns()
-            .select("doc_id", "doc_len", F.explode("tokens").alias("term"))
-            .groupBy("term", "doc_id", "doc_len")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .select("term", "doc_id", "tf", "doc_len")
-            .repartition(F.col("term"), (F.col("doc_id") / F.lit(1 << 20)).cast("long"))
-            .sortWithinPartitions("term", "doc_id")
-        ),
-    )
-    docs = runner.stage(
-        "docs",
-        lambda s: turns().select(
-            "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "doc_len"
-        ),
-    )
+    postings = runner.stage("postings", lambda s: ib.postings_layout(ib.invert(turns())))
+    docs = runner.stage("docs", lambda s: ib.docs_of(turns()))
     if _cache.get("persisted") is not None:  # both consumers have run
         _cache.pop("persisted").unpersist()
-    terms = runner.stage(
-        "terms",
-        lambda s: postings.groupBy("term").agg(
-            F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
-        ),
-    )
-    conv_ranges = runner.stage(
-        "conv_ranges",
-        lambda s: docs.groupBy("conv_id").agg(
-            F.min("doc_id").alias("from_doc_id"),
-            F.max("doc_id").alias("to_doc_id"),
-            F.count(F.lit(1)).alias("n_docs"),
-        ),
-    )
-    stats = runner.stage(
-        "stats",
-        lambda s: docs.agg(
-            F.sum("doc_len").alias("total_tokens"),
-            F.count(F.lit(1)).alias("num_docs"),
-            F.avg("doc_len").alias("avg_doc_len"),
-        )
-        .crossJoin(
-            terms.agg(F.count(F.lit(1)).alias("unique_terms"), F.sum("df").alias("num_pairs"))
-        )
-        .select("total_tokens", "unique_terms", "num_docs", "num_pairs", "avg_doc_len")
-        .coalesce(1),
-    )
+    terms = runner.stage("terms", lambda s: ib.terms_of(postings), reads=("postings",))
+    conv_ranges = runner.stage("conv_ranges", lambda s: ib.conv_ranges_of(docs), reads=("docs",))
+    stats = runner.stage("stats", lambda s: ib.stats_of(docs, terms), reads=("docs", "terms"))
 
     st = stats.collect()[0].asDict()
     avgdl = st["total_tokens"] / st["num_docs"] if st["num_docs"] else 1.0
     if bucket_range is None:
         # corpus-sized bucketing (verdict r4 #4): ~512 buckets keeps
         # WAND's bucket pruning effective at any corpus size
-        from ..operators.posting_blocks import auto_bucket_range
-
         bucket_range = auto_bucket_range(int(st["num_docs"]))
     blocks = runner.stage(
         "blocks",
         lambda s: build_posting_blocks(
             postings, avgdl=avgdl, block_size=block_size, bucket_range=bucket_range
         ),
+        params={"bucket_range": bucket_range, "block_size": block_size},
+        reads=("postings", "stats"),
     )
-    idx = InvertedIndex(docs=docs, postings=postings, terms=terms, conv_ranges=conv_ranges, stats=stats)
+    idx = ib.InvertedIndex(docs=docs, postings=postings, terms=terms, conv_ranges=conv_ranges, stats=stats)
     return idx, blocks, runner

@@ -24,7 +24,14 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.index_build import build_index, save_index
+from ..operators.index_build import (
+    DOC_COLS,
+    POSTING_COLS,
+    build_and_save_index,
+    derive_index,
+    terms_of,
+    write_index,
+)
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -44,10 +51,8 @@ def run_incremental_index(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        idx = build_index(batch_df)
         seg_path = f"{index_dir}/seg={batch_id}"
-        save_index(idx, seg_path)
-        n = idx.docs.count()
+        n = int(build_and_save_index(batch_df, seg_path).stats_row()["num_docs"])
         # manifest update — driver-side, single writer per stream.
         # Local-FS file IO; a cluster deployment swaps these two calls
         # for the Hadoop FileSystem API (same pattern as plans/lineage.py).
@@ -85,36 +90,32 @@ def load_segments(spark: SparkSession, index_dir: str) -> list[dict]:
         return json.load(f)["segments"]
 
 
+def _merged(spark: SparkSession, index_dir: str, table: str) -> DataFrame:
+    out = None
+    for s in load_segments(spark, index_dir):
+        t = spark.read.parquet(f"{s['path']}/{table}").withColumn(
+            "doc_id", F.col("doc_id") + F.lit(s["doc_base"])
+        )
+        out = t if out is None else out.unionByName(t)
+    return out
+
+
 def merged_postings(spark: SparkSession, index_dir: str) -> DataFrame:
     """Union of all segment postings with globalized doc_ids. Same
     (term, doc_id, tf, doc_len) contract as the batch postings table, so
     every scorer works unchanged over an incrementally-built index."""
-    segs = load_segments(spark, index_dir)
-    out = None
-    for s in segs:
-        p = spark.read.parquet(f"{s['path']}/postings").withColumn(
-            "doc_id", F.col("doc_id") + F.lit(s["doc_base"])
-        )
-        out = p if out is None else out.unionByName(p)
-    return out
+    return _merged(spark, index_dir, "postings")
 
 
 def merged_docs(spark: SparkSession, index_dir: str) -> DataFrame:
-    segs = load_segments(spark, index_dir)
-    out = None
-    for s in segs:
-        d = spark.read.parquet(f"{s['path']}/docs").withColumn(
-            "doc_id", F.col("doc_id") + F.lit(s["doc_base"])
-        )
-        out = d if out is None else out.unionByName(d)
-    return out
+    return _merged(spark, index_dir, "docs")
 
 
 def merge_segment_stats(spark: SparkSession, index_dir: str) -> dict:
     """Global stats across segments (df/cf re-aggregated — duplicate
     terms across segments merge exactly like SPIMI run merge)."""
     p = merged_postings(spark, index_dir)
-    terms = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
+    terms = terms_of(p)
     row = (
         p.agg(
             F.sum("tf").alias("total_tokens"),
@@ -145,32 +146,7 @@ def load_segmented_index(spark: SparkSession, index_dir: str):
     fragments, inflating conv_search candidates (scores stay correct —
     the extra docs score 0 term overlap unless they genuinely match).
     Compaction restores the strict invariant."""
-    from ..operators.index_build import InvertedIndex
-
-    p = merged_postings(spark, index_dir)
-    d = merged_docs(spark, index_dir)
-    terms = p.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
-    )
-    conv_ranges = d.groupBy("conv_id").agg(
-        F.min("doc_id").alias("from_doc_id"),
-        F.max("doc_id").alias("to_doc_id"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-    stats = (
-        d.agg(
-            F.sum("doc_len").alias("total_tokens"),
-            F.count(F.lit(1)).alias("num_docs"),
-            F.avg("doc_len").alias("avg_doc_len"),
-        )
-        .crossJoin(
-            terms.agg(
-                F.count(F.lit(1)).alias("unique_terms"), F.sum("df").alias("num_pairs")
-            )
-        )
-        .select("total_tokens", "unique_terms", "num_docs", "num_pairs", "avg_doc_len")
-    )
-    return InvertedIndex(docs=d, postings=p, terms=terms, conv_ranges=conv_ranges, stats=stats)
+    return derive_index(merged_docs(spark, index_dir), merged_postings(spark, index_dir))
 
 
 def compact_segments(spark: SparkSession, index_dir: str, out_dir: str) -> None:
@@ -227,56 +203,19 @@ def merge_indexes(spark: SparkSession, index_paths: list[str], out_dir: str) -> 
 
 def _fold(p_old: DataFrame, d_old: DataFrame, out_dir: str) -> None:
     """Shared fold core: re-rank docIDs dense by (conv_id, turn_idx),
-    remap postings via one join, rewrite the four derived tables in the
-    batch layout (salted (term, doc_id-bucket) postings, zstd)."""
+    remap postings via one join, then ``write_index`` — the batch
+    build's writer, so the result has the batch layout."""
     from ..operators.docid import assign_doc_ids
-    from ..operators.index_build import PARQUET_CODEC
 
     d_old = d_old.withColumnRenamed("doc_id", "_old_doc_id")
     d_new = assign_doc_ids(d_old)  # dense rank over (conv_id, turn_idx)
     mapping = d_new.select("_old_doc_id", F.col("doc_id").alias("_new_doc_id"))
-    d = d_new.drop("_old_doc_id").select(
-        "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "doc_len"
-    )  # canonical batch layout
+    d = d_new.drop("_old_doc_id").select(*DOC_COLS)
     p = (
         p_old.withColumnRenamed("doc_id", "_old_doc_id")
         .join(mapping, "_old_doc_id")
         .drop("_old_doc_id")
         .withColumnRenamed("_new_doc_id", "doc_id")
-        .select("term", "doc_id", "tf", "doc_len")  # canonical batch layout
+        .select(*POSTING_COLS)
     )
-    spark = p_old.sparkSession
-    (
-        p.repartition(F.col("term"), (F.col("doc_id") / F.lit(1 << 20)).cast("long"))
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .option("compression", PARQUET_CODEC)
-        .parquet(f"{out_dir}/postings")
-    )
-    d.write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(f"{out_dir}/docs")
-    if hasattr(d_new, "_ftse_persisted"):
-        d_new._ftse_persisted.unpersist()
-    postings = spark.read.parquet(f"{out_dir}/postings")
-    postings.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
-    ).write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(f"{out_dir}/terms")
-    docs = spark.read.parquet(f"{out_dir}/docs")
-    terms = spark.read.parquet(f"{out_dir}/terms")
-    docs.groupBy("conv_id").agg(
-        F.min("doc_id").alias("from_doc_id"),
-        F.max("doc_id").alias("to_doc_id"),
-        F.count(F.lit(1)).alias("n_docs"),
-    ).write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(
-        f"{out_dir}/conv_ranges"
-    )
-    docs.agg(
-        F.sum("doc_len").alias("total_tokens"),
-        F.count(F.lit(1)).alias("num_docs"),
-        F.avg("doc_len").alias("avg_doc_len"),
-    ).crossJoin(
-        terms.agg(F.count(F.lit(1)).alias("unique_terms"), F.sum("df").alias("num_pairs"))
-    ).select(
-        "total_tokens", "unique_terms", "num_docs", "num_pairs", "avg_doc_len"
-    ).coalesce(1).write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(
-        f"{out_dir}/stats"
-    )
+    write_index(p, d, out_dir, release=d_new._ftse_persisted)

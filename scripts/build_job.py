@@ -4,8 +4,11 @@ transcripts table and prints per-stage lineage metrics.
 
   spark-submit --py-files pkg.zip scripts/build_job.py <corpus> <index_out>
 
-Re-running after a failure resumes: completed stages are skipped
-(verified against their lineage checksums)."""
+Re-running after a failure resumes: a completed stage is skipped when
+the fingerprint of its parameters (and of the stages it reads) matches
+the one in its marker, and re-run otherwise. Resumed stages are NOT
+re-hashed; ``StageRunner.verify_lineage`` checks one against its lineage
+checksums on demand."""
 
 from __future__ import annotations
 

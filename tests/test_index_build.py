@@ -84,31 +84,43 @@ def test_global_stats(built):
     assert s["num_pairs"] == sum(golden["term_to_document_frequency"].values())
 
 
-def test_overlapped_writes_parity(spark, tiny_transcripts_pdf, tmp_path, monkeypatch):
-    """Concurrent derivation writes (docs ∥ terms, conv_ranges ∥ stats —
-    the Amdahl serial-tail fix) produce tables identical to the
-    sequential path."""
-    from fulltextsearchengine_spark.operators import index_build
+def test_build_paths_parity(spark, tiny_transcripts_pdf, tmp_path):
+    """The lazy, the materializing and the checkpointed build run the
+    same derivations, so all five tables are identical; the checkpointed
+    stages are written zstd like the materialized index."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from fulltextsearchengine_spark.operators.index_build import build_and_save_index
+    from fulltextsearchengine_spark.plans.lineage import build_index_checkpointed
 
     sdf = spark.createDataFrame(tiny_transcripts_pdf, schema=TRANSCRIPT_SCHEMA)
-    monkeypatch.setattr(index_build, "OVERLAP_WRITES", False)
-    a = index_build.build_and_save_index(sdf, str(tmp_path / "seq"))
-    monkeypatch.setattr(index_build, "OVERLAP_WRITES", True)
-    b = index_build.build_and_save_index(sdf, str(tmp_path / "ovl"))
-    for tbl in ("postings", "terms", "docs", "conv_ranges", "stats"):
-        x, y = getattr(a, tbl), getattr(b, tbl)
-        assert x.exceptAll(y).count() == 0 and y.exceptAll(x).count() == 0, tbl
+    lazy = build_index(sdf)
+    saved = build_and_save_index(sdf, str(tmp_path / "saved"))
+    ckpt, _, _ = build_index_checkpointed(spark, sdf, str(tmp_path / "ckpt"))
+    for tbl in ("docs", "postings", "terms", "conv_ranges", "stats"):
+        x = getattr(lazy, tbl)
+        for other in (saved, ckpt):
+            y = getattr(other, tbl).select(*x.columns)
+            assert x.exceptAll(y).count() == 0 and y.exceptAll(x).count() == 0, tbl
+    files = glob.glob(str(tmp_path / "ckpt" / "postings" / "data" / "*.parquet"))
+    assert files
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        for rg in range(meta.num_row_groups):
+            for c in range(meta.num_columns):
+                assert meta.row_group(rg).column(c).compression == "ZSTD", f
 
 
-def test_map_side_invert_parity(spark, tiny_transcripts_pdf, tmp_path):
-    """The single-shuffle Arrow-invert variant produces byte-identical
-    tables to the explode+groupBy default (see build_and_save_index
-    docstring — kept as a documented negative perf result)."""
+def test_build_and_save_index_job_count(spark, tiny_transcripts_pdf, tmp_path, count_jobs):
+    """build_and_save_index runs exactly 25 Spark jobs, and every one of
+    them, including those its writer submits from its own threads,
+    carries the caller's job group."""
     from fulltextsearchengine_spark.operators.index_build import build_and_save_index
 
     sdf = spark.createDataFrame(tiny_transcripts_pdf, schema=TRANSCRIPT_SCHEMA)
-    a = build_and_save_index(sdf, str(tmp_path / "a"))
-    b = build_and_save_index(sdf, str(tmp_path / "b"), map_side_invert=True)
-    for tbl in ("postings", "terms", "docs", "conv_ranges", "stats"):
-        x, y = getattr(a, tbl), getattr(b, tbl)
-        assert x.exceptAll(y).count() == 0 and y.exceptAll(x).count() == 0, tbl
+    sc = spark.sparkContext
+    first = sc._jsc.sc().dagScheduler().nextJobId()
+    _, jobs = count_jobs(lambda: build_and_save_index(sdf, str(tmp_path / "idx")))
+    assert jobs == sc._jsc.sc().dagScheduler().nextJobId() - first == 25

@@ -60,6 +60,29 @@ def test_partial_resume(spark, corpus, tmp_path_factory):
     assert sorted((r["term"], r["df"], r["cf"]) for r in idx2.terms.collect()) == terms_before
 
 
+def test_resume_reruns_stage_with_new_params(spark, corpus, tmp_path_factory):
+    """A resumed build never reuses a stage built with other parameters:
+    a changed bucket_range re-runs exactly the blocks stage, whose new
+    rows carry the new bucket ids; a marker without a fingerprint (an
+    older checkpoint) counts as a mismatch."""
+    from fulltextsearchengine_spark.plans.lineage import build_index_checkpointed
+
+    base = str(tmp_path_factory.mktemp("ckpt3"))
+    sdf = spark.createDataFrame(corpus, schema=TRANSCRIPT_SCHEMA)
+    build_index_checkpointed(spark, sdf, base)
+    _, blocks, r2 = build_index_checkpointed(spark, sdf, base, bucket_range=16)
+    assert r2.ran == ["blocks"]
+    rows = blocks.select("bucket", "first_doc_id", "last_doc_id").collect()
+    assert max(r["bucket"] for r in rows) > 0
+    for r in rows:
+        assert (r["first_doc_id"] - 1) // 16 == r["bucket"] == (r["last_doc_id"] - 1) // 16
+
+    with open(f"{base}/terms/_STAGE_DONE", "w"):
+        pass
+    _, _, r3 = build_index_checkpointed(spark, sdf, base, bucket_range=16)
+    assert r3.ran == ["terms"]
+
+
 def test_streaming_incremental_index(spark, corpus, tmp_path_factory):
     """Two parquet drops → two segments; merged postings/stats equal the
     one-shot batch build over the concatenated corpus (modulo docID

@@ -7,7 +7,6 @@ pruning)."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
 from fulltextsearchengine_spark import oracle
@@ -18,7 +17,7 @@ from fulltextsearchengine_spark.operators.posting_blocks import (
     blocks_to_postings,
 )
 from fulltextsearchengine_spark.operators.search import Searcher
-from fulltextsearchengine_spark.operators.wand import bm25_topk_wand, bm25_topk_wand_blockmax
+from fulltextsearchengine_spark.operators.wand import bm25_topk_wand
 from fulltextsearchengine_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 BUCKET_RANGE = 256  # small → forces multi-bucket groups in a 1000-doc corpus
@@ -132,32 +131,6 @@ def test_wand_distributed_prunes(spark):
     assert wstats["blocks_in_pruned_buckets"] > 0
 
 
-def test_blockmax_kernel_matches_oracle(ctx):
-    """Single-partition block-max skipping kernel: exact despite pruning."""
-    golden, idx, blocks, stats = ctx
-    import math
-
-    n = stats["num_docs"]
-    doc_lens = np.zeros(n + 1, dtype=np.float64)
-    for d, l in golden["doc_to_length"].items():
-        doc_lens[d] = l
-    terms_sorted = sorted(golden["term_to_document_frequency"])
-    for q in [terms_sorted[:5], terms_sorted[50:53], [terms_sorted[1]]]:
-        idf = {
-            t: math.log((n - golden["term_to_document_frequency"][t] + 0.5)
-                        / (golden["term_to_document_frequency"][t] + 0.5) + 1.0)
-            for t in q
-        }
-        bpdf = blocks.filter(blocks.term.isin(q)).toPandas()
-        got = bm25_topk_wand_blockmax(
-            bpdf, doc_lens, idf, 10, avgdl=stats["total_tokens"] / n
-        )
-        exp = oracle.bm25_search(golden, q, 10)
-        assert [g[0] for g in got] == [e[0] for e in exp], q
-        for e, g in zip(exp, got):
-            assert g[1] == pytest.approx(e[1], rel=1e-9)
-
-
 def test_local_bm25_server(ctx):
     """LocalBM25 (driver-side serving path) matches the oracle exactly,
     including cache-warm repeat queries and OOV terms."""
@@ -172,7 +145,10 @@ def test_local_bm25_server(ctx):
     )
     assert local.bucket_range == BUCKET_RANGE
     terms_sorted = sorted(term_df)
-    queries = [terms_sorted[:3], terms_sorted[20:24], [terms_sorted[5]], ["zzznotaword"], []]
+    queries = [
+        terms_sorted[:3], terms_sorted[20:24], [terms_sorted[5]], ["zzznotaword"], [],
+        terms_sorted[:5], terms_sorted[50:53], [terms_sorted[1]],
+    ]
     for q in queries:
         exp = oracle.bm25_search(golden, q, 10)
         for _ in range(2):  # second pass exercises the block cache
