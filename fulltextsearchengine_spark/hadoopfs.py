@@ -22,6 +22,13 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
+def stat(spark: SparkSession, path: str) -> tuple[int, int]:
+    """(size in bytes, modification time in ms) of a file."""
+    fs, jpath = _fs(spark, path)
+    st = fs.getFileStatus(jpath)
+    return int(st.getLen()), int(st.getModificationTime())
+
+
 def read_bytes(spark: SparkSession, path: str) -> bytes | None:
     """The whole file, or None when it does not exist. The bytes come
     back as the call's return value: py4j copies a returned byte[] into

@@ -30,13 +30,13 @@ codegen.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import tokens_col
+from . import bm25
 
 BM25F_K1 = 1.2
 BM25F_B = 0.75
@@ -114,11 +114,7 @@ def bm25f_scores(
         fidx.conv_terms.filter(F.col("term").isin(terms)).collect()
     )  # ≤|q| rows — driver-sized, same pattern as Searcher.term_stats
     n = fidx.num_convs
-    idf = {
-        r["term"]: math.log((n - r["df"] + 0.5) / (r["df"] + 0.5) + 1.0)
-        for r in df_rows
-        if r["df"] > 0
-    }
+    idf = {r["term"]: bm25.idf(n, r["df"]) for r in df_rows if r["df"] > 0}
     terms = sorted(idf)
     if not terms:
         return _empty(fidx)
@@ -126,14 +122,10 @@ def bm25f_scores(
     # per-(conv, role, term) weighted length-normalized tf contribution.
     # weight / avg_flen are per-role driver constants folded into a CASE.
     w_col = F.lit(0.0)
-    norm_col = F.lit(1.0)
-    for role, avg in sorted(fidx.avg_flen.items()):
+    for role in sorted(fidx.avg_flen):
         w = float(weights.get(role, 0.0))
         w_col = F.when(F.col("role") == role, F.lit(w)).otherwise(w_col)
-        norm_col = F.when(
-            F.col("role") == role,
-            F.lit(1.0 - b) + F.lit(b) * F.col("flen") / F.lit(avg),
-        ).otherwise(norm_col)
+    norm_col = _norm_col(fidx, b)
 
     fp = fidx.field_postings.filter(F.col("term").isin(terms))
     contrib = (
@@ -179,6 +171,55 @@ def _empty(fidx: FieldIndex) -> DataFrame:
     return spark.createDataFrame([], "conv_id string, score double")
 
 
+def _norm_col(fidx: FieldIndex, b: float):
+    """1 − b + b·flen/avglen_f as a CASE over the role fields."""
+    norm_col = F.lit(1.0)
+    for role, avg in sorted(fidx.avg_flen.items()):
+        norm_col = F.when(
+            F.col("role") == role,
+            F.lit(1.0 - b) + F.lit(b) * F.col("flen") / F.lit(avg),
+        ).otherwise(norm_col)
+    return norm_col
+
+
+def _per_field_scores(fidx, query, tie_breaker, k1, b, idf_col_of) -> DataFrame:
+    """The body dismax and cross_fields share: one pushed In(term,…)
+    scan, per-(term, role) df collected driver-side (≤ |q|·|roles|
+    rows), per-field BM25 with the idf CASE ``idf_col_of(df_rows)``
+    builds, then max + tie·(Σ − max) per (conv, term), summed per conv."""
+    if not 0.0 <= tie_breaker <= 1.0:
+        raise ValueError(f"tie_breaker must be in [0, 1], got {tie_breaker}")
+    terms = sorted({t.lower() for t in query})
+    if not terms:
+        return _empty(fidx)
+    fp = fidx.field_postings.filter(F.col("term").isin(terms))
+    df_rows = fp.groupBy("term", "role").agg(
+        F.count(F.lit(1)).alias("df")
+    ).collect()  # ≤ |q|·|roles| rows — driver-sized
+    if not df_rows:
+        return _empty(fidx)
+    idf_col = idf_col_of(df_rows)
+    s = fp.join(fidx.field_lens, ["conv_id", "role"]).select(
+        "conv_id",
+        "term",
+        (idf_col * F.col("tf") / (F.col("tf") + F.lit(k1) * _norm_col(fidx, b))).alias("s"),
+    )
+    per_term = s.groupBy("conv_id", "term").agg(
+        F.max("s").alias("mx"), F.sum("s").alias("tot")
+    )
+    return (
+        per_term.select(
+            "conv_id",
+            (
+                F.col("mx")
+                + F.lit(tie_breaker) * (F.col("tot") - F.col("mx"))
+            ).alias("d"),
+        )
+        .groupBy("conv_id")
+        .agg(F.sum("d").alias("score"))
+    )
+
+
 # ---------------------------------------------------------------- dismax
 # Lucene DisjunctionMaxQuery / Elasticsearch multi_match "best_fields"
 # (public semantics: Lucene DisMaxQuery.java docs; tie_breaker per the
@@ -215,54 +256,18 @@ def dismax_scores(
     b: float = BM25F_B,
 ) -> DataFrame:
     """(conv_id, score) under best-fields dismax over the role fields."""
-    if not 0.0 <= tie_breaker <= 1.0:
-        raise ValueError(f"tie_breaker must be in [0, 1], got {tie_breaker}")
-    terms = sorted({t.lower() for t in query})
-    if not terms:
-        return _empty(fidx)
-    fp = fidx.field_postings.filter(F.col("term").isin(terms))
-    df_rows = fp.groupBy("term", "role").agg(
-        F.count(F.lit(1)).alias("df")
-    ).collect()  # ≤ |q|·|roles| rows — driver-sized
-    idf = {
-        (r["term"], r["role"]): math.log(
-            (fidx.field_counts[r["role"]] - r["df"] + 0.5) / (r["df"] + 0.5)
-            + 1.0
-        )
-        for r in df_rows
-    }
-    if not idf:
-        return _empty(fidx)
-    idf_col = F.lit(0.0)
-    for (t, role), v in sorted(idf.items()):
-        idf_col = F.when(
-            (F.col("term") == t) & (F.col("role") == role), F.lit(v)
-        ).otherwise(idf_col)
-    norm_col = F.lit(1.0)
-    for role, avg in sorted(fidx.avg_flen.items()):
-        norm_col = F.when(
-            F.col("role") == role,
-            F.lit(1.0 - b) + F.lit(b) * F.col("flen") / F.lit(avg),
-        ).otherwise(norm_col)
-    s = fp.join(fidx.field_lens, ["conv_id", "role"]).select(
-        "conv_id",
-        "term",
-        (idf_col * F.col("tf") / (F.col("tf") + F.lit(k1) * norm_col)).alias("s"),
-    )
-    per_term = s.groupBy("conv_id", "term").agg(
-        F.max("s").alias("mx"), F.sum("s").alias("tot")
-    )
-    return (
-        per_term.select(
-            "conv_id",
-            (
-                F.col("mx")
-                + F.lit(tie_breaker) * (F.col("tot") - F.col("mx"))
-            ).alias("d"),
-        )
-        .groupBy("conv_id")
-        .agg(F.sum("d").alias("score"))
-    )
+
+    def idf_col(df_rows):
+        idf = {
+            (r["term"], r["role"]): bm25.idf(fidx.field_counts[r["role"]], r["df"])
+            for r in df_rows
+        }
+        col = F.lit(0.0)
+        for (t, role), v in sorted(idf.items()):
+            col = F.when((F.col("term") == t) & (F.col("role") == role), F.lit(v)).otherwise(col)
+        return col
+
+    return _per_field_scores(fidx, query, tie_breaker, k1, b, idf_col)
 
 
 def dismax_search(
@@ -320,53 +325,18 @@ def cross_fields_scores(
     b: float = BM25F_B,
 ) -> DataFrame:
     """(conv_id, score) under cross-fields blended-df scoring."""
-    if not 0.0 <= tie_breaker <= 1.0:
-        raise ValueError(f"tie_breaker must be in [0, 1], got {tie_breaker}")
-    terms = sorted({t.lower() for t in query})
-    if not terms:
-        return _empty(fidx)
-    fp = fidx.field_postings.filter(F.col("term").isin(terms))
-    df_rows = fp.groupBy("term", "role").agg(
-        F.count(F.lit(1)).alias("df")
-    ).collect()  # ≤ |q|·|roles| rows — driver-sized
-    if not df_rows:
-        return _empty(fidx)
-    df_blend: dict[str, int] = {}
-    for r in df_rows:
-        df_blend[r["term"]] = max(df_blend.get(r["term"], 0), int(r["df"]))
-    n_blend = max(fidx.field_counts.values())
-    idf = {
-        t: math.log((n_blend - d + 0.5) / (d + 0.5) + 1.0)
-        for t, d in df_blend.items()
-    }
-    idf_col = F.lit(0.0)
-    for t, v in sorted(idf.items()):
-        idf_col = F.when(F.col("term") == t, F.lit(v)).otherwise(idf_col)
-    norm_col = F.lit(1.0)
-    for role, avg in sorted(fidx.avg_flen.items()):
-        norm_col = F.when(
-            F.col("role") == role,
-            F.lit(1.0 - b) + F.lit(b) * F.col("flen") / F.lit(avg),
-        ).otherwise(norm_col)
-    s = fp.join(fidx.field_lens, ["conv_id", "role"]).select(
-        "conv_id",
-        "term",
-        (idf_col * F.col("tf") / (F.col("tf") + F.lit(k1) * norm_col)).alias("s"),
-    )
-    per_term = s.groupBy("conv_id", "term").agg(
-        F.max("s").alias("mx"), F.sum("s").alias("tot")
-    )
-    return (
-        per_term.select(
-            "conv_id",
-            (
-                F.col("mx")
-                + F.lit(tie_breaker) * (F.col("tot") - F.col("mx"))
-            ).alias("d"),
-        )
-        .groupBy("conv_id")
-        .agg(F.sum("d").alias("score"))
-    )
+
+    def idf_col(df_rows):
+        df_blend: dict[str, int] = {}
+        for r in df_rows:
+            df_blend[r["term"]] = max(df_blend.get(r["term"], 0), int(r["df"]))
+        n_blend = max(fidx.field_counts.values())
+        col = F.lit(0.0)
+        for t, d in sorted(df_blend.items()):
+            col = F.when(F.col("term") == t, F.lit(bm25.idf(n_blend, d))).otherwise(col)
+        return col
+
+    return _per_field_scores(fidx, query, tie_breaker, k1, b, idf_col)
 
 
 def cross_fields_search(

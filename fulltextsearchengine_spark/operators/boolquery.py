@@ -297,8 +297,8 @@ def bool_search(
     pos: set = set()
     all_: set = set()
     _terms_of(tree, False, pos, all_)
-    stats = searcher.term_stats(sorted(all_))
-    vocab = {t for t, (df, _) in stats.items() if df > 0}
+    idf = searcher.bm25_idf(searcher.term_stats(sorted(all_)))
+    vocab = set(idf)
     folded = _fold_oov(tree, vocab)
     if folded is _FALSE or not (pos & vocab):
         return searcher._empty_scores()
@@ -329,7 +329,9 @@ def bool_search(
         # a folded-_TRUE filter can only arise from negated OOV leaves;
         # the grounded tree still carries >=1 positive in-vocab term
         piv = piv.filter(_to_column(folded, slot))
-    scores = _bm25_over_pivot(searcher, piv, slot, score_terms, stats)
+    # filter, don't re-weight: plain BM25 over the positive terms
+    idf = {t: idf[t] for t in score_terms}
+    scores = piv.select("doc_id", Searcher.bm25_pivot_score(idf, searcher.avgdl, slot))
     return Searcher.topk(scores, k)
 
 
@@ -352,29 +354,6 @@ def _collect_phrases(n) -> set:
             out |= _collect_phrases(k)
         return out
     return set()
-
-
-def _bm25_over_pivot(
-    searcher: Searcher,
-    piv: DataFrame,
-    slot: dict,
-    score_terms: list[str],
-    stats: dict,
-) -> DataFrame:
-    """Plain bm25_scores math over an already-filtered pivot — scores
-    are identical to Searcher.bm25_scores on the surviving docs
-    (filter-don't-reweight; the expression is the Searcher's own shared
-    bm25_pivot_score, and ``stats`` is the term_stats dict bool_search
-    already collected — no second stats job)."""
-    import math
-
-    n = searcher.stats["num_docs"]
-    avgdl = (searcher.stats["total_tokens"] / n) if n else 0.0
-    idf = {
-        t: math.log((n - stats[t][0] + 0.5) / (stats[t][0] + 0.5) + 1.0)
-        for t in score_terms
-    }
-    return piv.select("doc_id", Searcher.bm25_pivot_score(idf, avgdl, slot))
 
 
 # ---- corpus slicing (no index) ----------------------------------------------

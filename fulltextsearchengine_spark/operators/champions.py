@@ -40,7 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .search import BM25_B, BM25_K1, Searcher, normalize_query
+from . import bm25
+from .search import Searcher, normalize_query
 
 N_CHAMPIONS = 128
 
@@ -49,8 +50,8 @@ def build_champion_lists(
     postings: DataFrame,
     n_champions: int = N_CHAMPIONS,
     avgdl: float | None = None,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    k1: float = bm25.K1,
+    b: float = bm25.B,
 ) -> DataFrame:
     """(term, doc_id, tf) tier: per term the top-``n_champions`` postings
     by STATIC BM25 IMPACT desc (tf·(k1+1)/(tf + k1·(1−b+b·len/avgdl)) —
@@ -92,8 +93,8 @@ def champion_bm25_search(
     k: int,
     n_champions: int = N_CHAMPIONS,
     champions: DataFrame | None = None,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    k1: float = bm25.K1,
+    b: float = bm25.B,
 ) -> DataFrame:
     """(doc_id, score) top-k over the champion candidate union —
     exact BM25 scoring restricted to tier candidates. Pass a persisted

@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .search import BM25_B, BM25_K1, Searcher
+from . import bm25
+from .search import Searcher
 
 
 def collapsed_bm25_search(
@@ -31,8 +32,8 @@ def collapsed_bm25_search(
     query: list[str] | None = None,
     k: int = 10,
     per_conv: int = 1,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    k1: float = bm25.K1,
+    b: float = bm25.B,
     scores: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, conv_id, score) top-k, ≤ ``per_conv`` rows per conv_id;

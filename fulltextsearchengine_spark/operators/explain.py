@@ -16,20 +16,19 @@ candidate-restricted scan on top of the search itself.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .search import BM25_B, BM25_K1, Searcher, normalize_query
+from . import bm25
+from .search import Searcher, normalize_query
 
 
 def explain_bm25(
     searcher: Searcher,
     query: list[str],
     k: int,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    k1: float = bm25.K1,
+    b: float = bm25.B,
 ) -> DataFrame:
     """One row per (doc_id, term) with term present in a top-k doc:
     (doc_id, term, tf, doc_len, df, idf, contrib, score) where
@@ -37,29 +36,13 @@ def explain_bm25(
     is the doc's total (the sum of its contribs — absent query terms
     contribute exactly 0 in BM25, so rows are emitted only for matches).
     """
-    terms = sorted(set(normalize_query(query)))
-    stats = searcher.term_stats(terms)
-    n = searcher.stats["num_docs"]
-    avgdl = (searcher.stats["total_tokens"] / n) if n else 0.0
-    idf = {
-        t: math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-        for t, (df, _) in stats.items()
-        if df > 0
-    }
+    stats = searcher.term_stats(normalize_query(query))
+    idf = searcher.bm25_idf(stats)
     top = searcher.topk(
         searcher.bm25_scores(query, k1=k1, b=b), k
     )  # (doc_id, score), k rows
-    if not idf:
-        return top.select(
-            "doc_id",
-            F.lit(None).cast("string").alias("term"),
-            F.lit(None).cast("bigint").alias("tf"),
-            F.lit(None).cast("bigint").alias("doc_len"),
-            F.lit(None).cast("bigint").alias("df"),
-            F.lit(None).cast("double").alias("idf"),
-            F.lit(None).cast("double").alias("contrib"),
-            "score",
-        ).limit(0)
+    # an all-OOV query scans In(term, []): the optimizer folds it to an
+    # empty relation with the same columns
     p = searcher.postings_for(sorted(idf)).join(
         F.broadcast(top), "doc_id"
     )
@@ -68,10 +51,8 @@ def explain_bm25(
     for t in sorted(idf):
         df_col = F.when(F.col("term") == t, F.lit(stats[t][0])).otherwise(df_col)
         idf_col = F.when(F.col("term") == t, F.lit(idf[t])).otherwise(idf_col)
-    norm_len = F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avgdl)
-    )
-    contrib = idf_col * F.col("tf") * F.lit(k1 + 1.0) / (F.col("tf") + norm_len)
+    norm_len = Searcher.bm25_norm_len(searcher.avgdl, k1, b)
+    contrib = Searcher.bm25_contrib(idf_col, F.col("tf"), norm_len, k1)
     return p.select(
         "doc_id",
         "term",

@@ -31,7 +31,8 @@ from collections import Counter
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .search import BM25_B, BM25_K1, Searcher, normalize_query
+from . import bm25
+from .search import Searcher, normalize_query
 
 RM3_FB_DOCS = 10
 RM3_FB_TERMS = 8
@@ -85,45 +86,19 @@ def rm3_expand(
 def bm25_weighted_scores(
     searcher: Searcher,
     weights: dict[str, float],
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    k1: float = bm25.K1,
+    b: float = bm25.B,
     min_should_match: int = 1,
 ) -> DataFrame:
     """(doc_id, score): Σ_t w_t · idf_t · tf(k1+1)/(tf + k1(1−b+b·len/avgdl))
-    — bm25_scores with a per-term multiplier; same pruned-pivot plan
-    (the shared bm25_pivot_score with the weight folded into idf).
+    — bm25_scores with a per-term multiplier: the Searcher's one BM25
+    core with the weight folded into idf, so the plan is bm25_scores'.
     ``min_should_match``: m-of-n distinct-term matching over the
-    weighted terms, same semantics as bm25_scores_msm — so query-time
-    boosts (queryparse ``term^2.5``) compose with ``mm:N``."""
-    terms = sorted(t for t, w in weights.items() if w > 0.0)
-    if not 1 <= min_should_match <= max(len(terms), 1):
-        raise ValueError(
-            f"min_should_match {min_should_match} out of [1, {len(terms)}] "
-            f"for weighted terms {terms}"
-        )
-    if not terms:
-        return searcher._empty_scores()
-    stats = searcher.term_stats(terms)
-    n = searcher.stats["num_docs"]
-    avgdl = (searcher.stats["total_tokens"] / n) if n else 0.0
-    idf_w = {
-        t: weights[t] * math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-        for t, (df, _) in stats.items()
-        if df > 0
-    }
-    terms = sorted(idf_w)
-    if not terms or len(terms) < min_should_match:
-        return searcher._empty_scores()
-    piv = searcher._pivoted_tf(terms)
-    slot = {t: f"tf_{i}" for i, t in enumerate(terms)}
-    if min_should_match > 1:
-        matched = F.lit(0)
-        for i in range(len(terms)):
-            matched = matched + F.col(f"tf_{i}").isNotNull().cast("int")
-        piv = piv.filter(matched >= F.lit(min_should_match))
-    return piv.select(
-        "doc_id", Searcher.bm25_pivot_score(idf_w, avgdl, slot, k1, b)
-    )
+    positively weighted terms, same semantics as bm25_scores_msm — so
+    query-time boosts (queryparse ``term^2.5``) compose with ``mm:N``."""
+    boosts = {t.lower(): w for t, w in weights.items() if w > 0.0}
+    terms = bm25.query_terms(boosts, min_should_match)
+    return searcher._bm25(terms, min_should_match, boosts, k1=k1, b=b)
 
 
 def query_clarity(

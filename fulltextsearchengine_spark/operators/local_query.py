@@ -15,20 +15,24 @@ k-merges (score desc, doc_id asc). Locally one shard = the whole index.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import bm25
 from .posting_blocks import decode_block
-from .wand import BM25_B, BM25_K1, topk_select
+from .wand import topk_select
 
 _BLOCK_COLS = [
     "term", "bucket", "block_id", "n", "first_doc_id", "last_doc_id",
     "max_tf", "max_impact", "gaps_ctrl", "gaps_data", "tfs_ctrl", "tfs_data",
 ]
+
+
+def fetch_blocks(blocks: DataFrame, terms: list[str]) -> pd.DataFrame:
+    """Every block row of ``terms``, in one Spark job."""
+    return blocks.filter(F.col("term").isin(terms)).select(*_BLOCK_COLS).toPandas()
 
 
 class LocalBM25:
@@ -41,8 +45,8 @@ class LocalBM25:
         n_docs: int,
         total_tokens: int,
         term_df: dict[str, int],
-        k1: float = BM25_K1,
-        b: float = BM25_B,
+        k1: float = bm25.K1,
+        b: float = bm25.B,
         bucket_range: int | None = None,
     ):
         """``slabs`` is the build-time doc_len sidecar
@@ -93,39 +97,29 @@ class LocalBM25:
                     [n_docs] + [int(r["n"]) for r in slab_rows]
                 )
         self.bucket_range = bucket_range
-        self._cache: dict[str, pd.DataFrame] = {}
         # decoded hot-posting cache: term → {bucket: (ids, impact, ub)}
         # with impact = precomputed idf-free BM25 tf-side contribution —
         # the analog of a serving node's posting cache (the reference
-        # re-seeks its HDD per query; we pay decode once per term)
+        # re-seeks its HDD per query; we pay fetch + decode once per term)
         self._decoded: dict[str, dict[int, tuple[np.ndarray, np.ndarray, float]]] = {}
 
-    def _load(self, terms: list[str]) -> None:
-        """Fetch every uncached term's blocks in one Spark job."""
-        missing = [t for t in terms if t not in self._cache]
-        if missing:
-            pdf = (
-                self.blocks.filter(F.col("term").isin(missing))
-                .select(*_BLOCK_COLS)
-                .toPandas()
-            )
-            for t, grp in pdf.groupby("term"):
-                self._cache[t] = grp
-            for t in missing:
-                self._cache.setdefault(t, pd.DataFrame(columns=_BLOCK_COLS))
+    def _missing(self, query: list[str]) -> list[str]:
+        """The query's in-vocab terms that are not decoded yet."""
+        return [
+            t for t in bm25.query_terms(query)
+            if t not in self._decoded and self.idf(t) is not None
+        ]
 
-    def _fetch_blocks(self, terms: list[str]) -> pd.DataFrame:
-        self._load(terms)
-        frames = [self._cache[t] for t in terms if len(self._cache[t])]
-        if not frames:
-            return pd.DataFrame(columns=_BLOCK_COLS)
-        return pd.concat(frames, ignore_index=True)
+    def _decode(self, pdf: pd.DataFrame, terms: list[str]) -> None:
+        """Decode fetched block rows into the cache. Every term of
+        ``terms`` gets an entry, an empty one when ``pdf`` holds none of
+        its blocks, so it is never fetched again."""
+        groups = dict(iter(pdf.groupby("term")))
+        for t in terms:
+            self._decoded[t] = self._decode_term(groups[t]) if t in groups else {}
 
-    def _decoded_term(self, term: str) -> dict[int, tuple[np.ndarray, np.ndarray, float]]:
-        if term in self._decoded:
-            return self._decoded[term]
+    def _decode_term(self, pdf: pd.DataFrame) -> dict[int, tuple[np.ndarray, np.ndarray, float]]:
         out: dict[int, list] = {}
-        pdf = self._fetch_blocks([term])
         for row in pdf.itertuples(index=False):
             ids, tfs = decode_block(row)
             out.setdefault(int(row.bucket), []).append((ids, tfs, float(row.max_impact)))
@@ -155,14 +149,13 @@ class LocalBM25:
                     f"[{ids[0]}, {ids[-1]}] vs assumed range {self.bucket_range})"
                 )
             dec[bkt] = (ids_rel, contrib0, max(p[2] for p in parts))
-        self._decoded[term] = dec
         return dec
 
     def idf(self, term: str) -> float | None:
         df = self.term_df.get(term, 0)
         if df <= 0:
             return None
-        return math.log((self.n_docs - df + 0.5) / (df + 0.5) + 1.0)
+        return bm25.idf(self.n_docs, df)
 
     def search(self, query: list[str], k: int) -> list[tuple[int, float]]:
         """Exact BM25 top-k over the decoded-posting cache with per-
@@ -170,12 +163,13 @@ class LocalBM25:
         doc_id asc tie-break — ReviewSearch.java:98-101)."""
         import heapq
 
-        terms = sorted({t.lower() for t in query})
-        idf = {t: w for t in terms if (w := self.idf(t)) is not None}
+        idf = {t: w for t in bm25.query_terms(query) if (w := self.idf(t)) is not None}
         if not idf:
             return []
-        self._load([t for t in sorted(idf) if t not in self._decoded])
-        dec = {t: self._decoded_term(t) for t in sorted(idf)}
+        missing = self._missing(query)
+        if missing:
+            self._decode(fetch_blocks(self.blocks, missing), missing)
+        dec = {t: self._decoded[t] for t in idf}
         # process buckets in DESCENDING upper-bound order: the heap
         # fills with high scores first, so later low-ub buckets skip —
         # classic impact-ordered traversal; results identical (skip

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..codecs import gaps_encode, svb_decode, svb_encode, tf_decode, tf_encode
+from . import bm25
 
 DEFAULT_BLOCK_SIZE = 128
 # docIDs per build bucket. Trade-off: bounds a build task's postings at
@@ -92,8 +93,8 @@ def build_posting_blocks(
     avgdl: float,
     block_size: int = DEFAULT_BLOCK_SIZE,
     bucket_range: int = DEFAULT_BUCKET_RANGE,
-    k1: float = 1.2,
-    b: float = 0.75,
+    k1: float = bm25.K1,
+    b: float = bm25.B,
     group_range: int | None = None,
 ) -> DataFrame:
     """postings(term, doc_id, tf, doc_len) → compressed block table.

@@ -25,7 +25,6 @@ is then re-ranked by a broadcast-joined external frame instead.
 
 from __future__ import annotations
 
-import math
 from collections import Counter
 
 from pyspark.sql import DataFrame
@@ -64,18 +63,10 @@ def rescore_search(
         raise ValueError(f"k and window_size must be ≥ 1, got {k}, {window_size}")
     if window_size < k:
         raise ValueError(f"window_size ({window_size}) must be ≥ k ({k})")
-    folded = normalize_query(query)
-    qtf = Counter(folded)
-    terms = sorted(set(folded))
-    stats = searcher.term_stats(terms)
-    g = searcher.stats
-    n, total = g["num_docs"], g["total_tokens"]
-    avgdl = (total / n) if n else 0.0
-    idf = {
-        t: math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-        for t, (df, _) in stats.items()
-        if df > 0
-    }
+    qtf = Counter(normalize_query(query))
+    stats = searcher.term_stats(sorted(qtf))
+    idf = searcher.bm25_idf(stats)
+    total = searcher.stats["total_tokens"]
     terms = sorted(idf)
     if not terms or not total:
         return searcher._empty_scores().select(
@@ -86,17 +77,10 @@ def rescore_search(
         )
     piv = searcher._pivoted_tf(terms)
     slot = {t: f"tf_{i}" for i, t in enumerate(terms)}
-    first = searcher.bm25_pivot_score(idf, avgdl, slot)
+    first = searcher.bm25_pivot_score(idf, searcher.avgdl, slot)
     if second_scores is None:
-        # Dirichlet QL off the same pivot, sorted-term accumulation
-        denom = F.col("doc_len") + F.lit(mu)
-        second = F.lit(0.0)
-        for t in terms:
-            tf = F.coalesce(F.col(slot[t]).cast("double"), F.lit(0.0))
-            p_c = stats[t][1] / total
-            second = second + F.lit(float(qtf[t])) * F.log(
-                (tf + F.lit(mu * p_c)) / denom
-            )
+        # Dirichlet QL off the same pivot
+        second = searcher.dirichlet_pivot_score(qtf, stats, total, mu, slot)
         both = piv.select(
             "doc_id",
             first.alias("first_score"),

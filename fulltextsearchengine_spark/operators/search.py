@@ -3,8 +3,15 @@
 Three scorers over one index:
 - lnn.ltc vector space  (ReviewSearch.java:27-104 semantics)
 - Jelinek–Mercer unigram LM, λ=0.5 (ReviewSearch.java:146-199)
-- BM25 (north-star scale path; Robertson/Sparck-Jones idf, k1=1.2 b=0.75)
+- BM25 (north-star scale path; k1, b and idf from bm25.py)
 plus conv_search, the productSearch analog (ReviewSearch.java:235-284).
+
+One BM25 core (``Searcher._bm25``) serves every BM25 variant: OR
+(``bm25_scores``, m = 1), minimum-should-match (``bm25_scores_msm``, m),
+AND (``bm25_search_conjunctive``, m = number of distinct terms) and
+weighted BM25 (feedback.bm25_weighted_scores, boosts folded into idf).
+m changes the candidate set, never the math: m > 1 adds one Filter on
+the pivot's matched-slot count, m = 1 adds none.
 
 Float determinism: the oracle (oracle.py) accumulates per-doc scores in
 sorted-term order. To be *bit-identical* rather than merely close, each
@@ -28,13 +35,12 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import bm25
 from .index_build import InvertedIndex
 
-BM25_K1 = 1.2
-BM25_B = 0.75
 LM_LAMBDA = 0.5
 LM_DIRICHLET_MU = 2000.0
 
@@ -72,6 +78,17 @@ class Searcher:
             # empty corpus: SUM aggregates are null (total_tokens etc.)
             self._stats = {k: (0 if v is None else v) for k, v in st.items()}
         return self._stats
+
+    @property
+    def avgdl(self) -> float:
+        n = self.stats["num_docs"]
+        return (self.stats["total_tokens"] / n) if n else 0.0
+
+    def bm25_idf(self, stats: dict[str, tuple[int, int]]) -> dict[str, float]:
+        """term → BM25 idf for the in-vocab (df > 0) terms of a
+        ``term_stats`` result."""
+        n = self.stats["num_docs"]
+        return {t: bm25.idf(n, df) for t, (df, _) in stats.items() if df > 0}
 
     def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         """term -> (df, cf) for the given terms; absent terms omitted.
@@ -127,21 +144,38 @@ class Searcher:
 
     # ---- scorers -------------------------------------------------------
     @staticmethod
-    def bm25_pivot_score(idf, avgdl, slot, k1=BM25_K1, b=BM25_B):
+    def _matched(n: int) -> Column:
+        """How many of a pivot's n tf slots are set: the m-of-n count."""
+        matched = F.lit(0)
+        for i in range(n):
+            matched = matched + F.col(f"tf_{i}").isNotNull().cast("int")
+        return matched
+
+    @staticmethod
+    def bm25_norm_len(avgdl, k1=bm25.K1, b=bm25.B) -> Column:
+        """k1·(1−b+b·doc_len/avgdl), the BM25 length norm, as a Column."""
+        return F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avgdl))
+
+    @staticmethod
+    def bm25_contrib(idf: Column, tf: Column, norm_len: Column, k1=bm25.K1) -> Column:
+        """idf·tf·(k1+1)/(tf + norm_len): one term's BM25 contribution as
+        a Column, in the oracle's operation order. Build ``norm_len``
+        (``bm25_norm_len``) once per query: each Column op is a py4j call."""
+        return idf * tf * F.lit(k1 + 1.0) / (tf + norm_len)
+
+    @staticmethod
+    def bm25_pivot_score(idf, avgdl, slot, k1=bm25.K1, b=bm25.B):
         """Σ_t idf·tf·(k1+1)/(tf + k1·(1−b+b·len/avgdl)) as one Column
         over a (doc_id, doc_len, tf-slot…) pivot — THE BM25-over-pivot
-        expression, shared by bm25_scores / _conjunctive / _msm and
-        boolquery, so the math lives in exactly one place. Terms add in
+        expression, shared by the BM25 core, rescore and boolquery, so
+        the math lives in exactly one place. Terms add in
         sorted order (reproducible float sums, oracle-identical);
         missing slots coalesce to 0 (a no-op on pre-filtered pivots
         whose slots are all non-null)."""
-        norm_len = F.lit(k1) * (
-            F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avgdl)
-        )
+        norm_len = Searcher.bm25_norm_len(avgdl, k1, b)
         score = F.lit(0.0)
         for t in sorted(idf):
-            tf = F.col(slot[t])
-            contrib = F.lit(idf[t]) * tf * F.lit(k1 + 1.0) / (tf + norm_len)
+            contrib = Searcher.bm25_contrib(F.lit(idf[t]), F.col(slot[t]), norm_len, k1)
             score = score + F.coalesce(contrib, F.lit(0.0))
         return score.alias("score")
 
@@ -190,32 +224,44 @@ class Searcher:
             score = score + F.coalesce(contrib, F.lit(0.0))
         return piv.select("doc_id", score.alias("score"))
 
+    def _bm25(
+        self,
+        terms: list[str],
+        min_should_match: int = 1,
+        boosts: dict[str, float] | None = None,
+        candidates: DataFrame | None = None,
+        k1: float = bm25.K1,
+        b: float = bm25.B,
+    ) -> DataFrame:
+        """The BM25 core: (doc_id, score) over the docs holding at least
+        ``min_should_match`` of the in-vocab ``terms``, each term weighted
+        idf·boost. OOV terms (df = 0) count toward neither side, so fewer
+        than m in-vocab terms match nothing. m > 1 filters the pivot on
+        its matched-slot count; m = 1 adds no Filter."""
+        w = self.bm25_idf(self.term_stats(terms))
+        if boosts:
+            w = {t: boosts[t] * v for t, v in w.items()}
+        if not w or len(w) < min_should_match:
+            return self._empty_scores()
+        terms = sorted(w)
+        piv = self._pivoted_tf(terms, candidates=candidates)
+        if min_should_match > 1:
+            piv = piv.filter(self._matched(len(terms)) >= F.lit(min_should_match))
+        slot = {t: f"tf_{i}" for i, t in enumerate(terms)}
+        return piv.select("doc_id", self.bm25_pivot_score(w, self.avgdl, slot, k1, b))
+
     def bm25_scores(
         self,
         query: list[str],
-        k1: float = BM25_K1,
-        b: float = BM25_B,
+        k1: float = bm25.K1,
+        b: float = bm25.B,
         candidates: DataFrame | None = None,
     ) -> DataFrame:
         """(doc_id, score): Σ_t idf·tf·(k1+1)/(tf + k1·(1−b+b·len/avgdl)).
         ``candidates`` restricts the scored docs (semi-join pre-pivot) —
         scoring math (global df/avgdl) is unchanged: filter, don't
         re-weight."""
-        terms = sorted(set(normalize_query(query)))
-        stats = self.term_stats(terms)
-        n = self.stats["num_docs"]
-        avgdl = (self.stats["total_tokens"] / n) if n else 0.0
-        idf = {
-            t: math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-            for t, (df, _) in stats.items()
-            if df > 0
-        }
-        terms = sorted(idf)
-        if not terms:
-            return self._empty_scores()
-        piv = self._pivoted_tf(terms, candidates=candidates)
-        slot = {t: f"tf_{i}" for i, t in enumerate(terms)}
-        return piv.select("doc_id", self.bm25_pivot_score(idf, avgdl, slot, k1, b))
+        return self._bm25(bm25.query_terms(query), candidates=candidates, k1=k1, b=b)
 
     def lm_scores(self, query: list[str], lam: float = LM_LAMBDA) -> DataFrame:
         """(doc_id, score): Π over DISTINCT query terms of
@@ -265,16 +311,22 @@ class Searcher:
         terms = sorted(t for t in qtf if stats.get(t, (0, 0))[1] > 0)
         if not terms:
             return self._empty_scores()
-        piv = self._pivoted_tf(terms)
+        slot = {t: f"tf_{i}" for i, t in enumerate(terms)}
+        score = self.dirichlet_pivot_score(qtf, stats, total, mu, slot)
+        return self._pivoted_tf(terms).select("doc_id", score.alias("score"))
+
+    @staticmethod
+    def dirichlet_pivot_score(qtf, stats, total, mu, slot) -> Column:
+        """Σ_t qtf_t · ln((tf + μ·cf_t/total) / (doc_len + μ)) as one
+        Column over a pivot, terms in sorted order; a missing slot is tf 0.
+        Shared by lm_dirichlet_scores and rescore's second pass."""
         denom = F.col("doc_len") + F.lit(mu)
         score = F.lit(0.0)
-        for i, t in enumerate(terms):
-            tf = F.coalesce(F.col(f"tf_{i}").cast("double"), F.lit(0.0))
+        for t in sorted(slot):
+            tf = F.coalesce(F.col(slot[t]).cast("double"), F.lit(0.0))
             p_c = stats[t][1] / total
-            score = score + F.lit(float(qtf[t])) * F.log(
-                (tf + F.lit(mu * p_c)) / denom
-            )
-        return piv.select("doc_id", score.alias("score"))
+            score = score + F.lit(float(qtf[t])) * F.log((tf + F.lit(mu * p_c)) / denom)
+        return score
 
     def lm_dirichlet_search(
         self, query: list[str], k: int, mu: float = LM_DIRICHLET_MU
@@ -330,8 +382,8 @@ class Searcher:
         k: int,
         role: str | None = None,
         conv_prefix: str | None = None,
-        k1: float = BM25_K1,
-        b: float = BM25_B,
+        k1: float = bm25.K1,
+        b: float = bm25.B,
     ) -> DataFrame:
         """BM25 top-k restricted to turns matching metadata predicates
         (role, conv_id prefix). Scoring semantics are unchanged (global
@@ -352,8 +404,8 @@ class Searcher:
         self,
         query: list[str],
         k: int,
-        k1: float = BM25_K1,
-        b: float = BM25_B,
+        k1: float = bm25.K1,
+        b: float = bm25.B,
     ) -> DataFrame:
         """AND-semantics BM25 top-k: only docs containing EVERY query
         term score (the posting-list-intersection processing mode; the
@@ -361,39 +413,20 @@ class Searcher:
         Scores equal bm25_scores on the surviving docs — intersection
         changes the candidate set, never the math.
 
-        Plan: the same pruned ≤|q|-column pivot as every scorer; the
-        intersection is a null-check across the pivot columns (no extra
-        join — the pivot row already has one slot per term). Any OOV
-        term (df=0) empties the result by definition of AND."""
-        terms = sorted(set(normalize_query(query)))
-        if not terms:
-            return self._empty_scores()
-        stats = self.term_stats(terms)
-        n = self.stats["num_docs"]
-        if any(stats.get(t, (0, 0))[0] == 0 for t in terms):
-            return self._empty_scores()  # AND with an OOV term matches nothing
-        avgdl = (self.stats["total_tokens"] / n) if n else 0.0
-        idf = {
-            t: math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-            for t, (df, _) in stats.items()
-        }
-        piv = self._pivoted_tf(terms)
-        present = F.lit(True)
-        for i in range(len(terms)):
-            present = present & F.col(f"tf_{i}").isNotNull()
-        piv = piv.filter(present)
-        slot = {t: f"tf_{i}" for i, t in enumerate(terms)}
-        return self.topk(
-            piv.select("doc_id", self.bm25_pivot_score(idf, avgdl, slot, k1, b)), k
-        )
+        The BM25 core with m = the number of distinct terms, so the
+        intersection is the matched-slot Filter on the same pivot (no
+        extra join). Any OOV term (df=0) empties the result by
+        definition of AND; an empty query matches nothing."""
+        terms = bm25.query_terms(query)
+        return self.topk(self._bm25(terms, max(len(terms), 1), k1=k1, b=b), k)
 
     def bm25_search_msm(
         self,
         query: list[str],
         k: int,
         min_should_match: int,
-        k1: float = BM25_K1,
-        b: float = BM25_B,
+        k1: float = bm25.K1,
+        b: float = bm25.B,
     ) -> DataFrame:
         """Minimum-should-match BM25 top-k: only docs containing at
         least ``min_should_match`` DISTINCT query terms score — the
@@ -408,8 +441,8 @@ class Searcher:
         self,
         query: list[str],
         min_should_match: int,
-        k1: float = BM25_K1,
-        b: float = BM25_B,
+        k1: float = bm25.K1,
+        b: float = bm25.B,
     ) -> DataFrame:
         """(doc_id, score) for docs matching ≥ ``min_should_match``
         DISTINCT query terms. Scores equal ``bm25_scores`` on the
@@ -426,33 +459,10 @@ class Searcher:
         scan, one partial-agg pivot shuffle; the m-of-n test is a
         driver-built sum of null-checks over the pivot's tf slots, so
         no extra join or exchange appears (scripts/explain_plans.py
-        asserts the shape for the AND specialization)."""
-        terms = sorted(set(normalize_query(query)))
-        if not 1 <= min_should_match <= max(len(terms), 1):
-            raise ValueError(
-                f"min_should_match {min_should_match} out of [1, {len(terms)}] "
-                f"for query terms {terms}"
-            )
-        if not terms:
-            return self._empty_scores()
-        stats = self.term_stats(terms)
-        n = self.stats["num_docs"]
-        avgdl = (self.stats["total_tokens"] / n) if n else 0.0
-        idf = {
-            t: math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-            for t, (df, _) in stats.items()
-            if df > 0
-        }
-        terms = sorted(idf)
-        if len(terms) < min_should_match:
-            return self._empty_scores()
-        piv = self._pivoted_tf(terms)
-        matched = F.lit(0)
-        for i in range(len(terms)):
-            matched = matched + F.col(f"tf_{i}").isNotNull().cast("int")
-        piv = piv.filter(matched >= F.lit(min_should_match))
-        slot = {t: f"tf_{i}" for i, t in enumerate(terms)}
-        return piv.select("doc_id", self.bm25_pivot_score(idf, avgdl, slot, k1, b))
+        asserts the shape for m = 2 and for the AND specialization)."""
+        return self._bm25(
+            bm25.query_terms(query, min_should_match), min_should_match, k1=k1, b=b
+        )
 
     def match_counts(self, query: list[str]) -> DataFrame:
         """(min_should_match, n_hits): the ES ``_count`` API generalized
@@ -467,20 +477,15 @@ class Searcher:
         left join against the m axis (both sides n rows) — the whole
         curve costs one posting pass, not n re-queries. OOV-only
         queries return an empty frame (no satisfiable m)."""
-        terms = sorted(set(normalize_query(query)))
-        stats = self.term_stats(terms)
-        terms = sorted(t for t in terms if stats.get(t, (0, 0))[0] > 0)
+        terms = sorted(self.bm25_idf(self.term_stats(normalize_query(query))))
         spark = self.index.postings.sparkSession
         if not terms:
             return spark.createDataFrame(
                 [], "min_should_match int, n_hits bigint"
             )
-        piv = self._pivoted_tf(terms)
-        matched = F.lit(0)
-        for i in range(len(terms)):
-            matched = matched + F.col(f"tf_{i}").isNotNull().cast("int")
         dist = (
-            piv.select(matched.alias("matched"))
+            self._pivoted_tf(terms)
+            .select(self._matched(len(terms)).alias("matched"))
             .groupBy("matched")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
@@ -498,8 +503,8 @@ class Searcher:
         self,
         queries: dict[str, list[str]],
         k: int,
-        k1: float = BM25_K1,
-        b: float = BM25_B,
+        k1: float = bm25.K1,
+        b: float = bm25.B,
     ) -> DataFrame:
         """(query_id, doc_id, score, rank): BM25 top-k for MANY queries
         in ONE Spark job — the analytical shape the single-query
@@ -508,27 +513,23 @@ class Searcher:
         rank window partitioned by query_id (parallel across queries).
         """
         spark = self.index.postings.sparkSession
-        all_terms = sorted({t for ts in queries.values() for t in normalize_query(ts)})
-        stats = self.term_stats(all_terms)
-        n = self.stats["num_docs"]
-        avgdl = (self.stats["total_tokens"] / n) if n else 0.0
-        rows = []
-        for qid, ts in queries.items():
-            for t in sorted(set(normalize_query(ts))):
-                df = stats.get(t, (0, 0))[0]
-                if df > 0:
-                    idf = math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-                    rows.append((qid, t, idf))
+        idf = self.bm25_idf(
+            self.term_stats([t for ts in queries.values() for t in normalize_query(ts)])
+        )
+        rows = [
+            (qid, t, idf[t])
+            for qid, ts in queries.items()
+            for t in bm25.query_terms(ts)
+            if t in idf
+        ]
         if not rows:
             return spark.createDataFrame(
                 [], "query_id string, doc_id long, score double, rank int"
             )
         qdf = spark.createDataFrame(rows, "query_id string, term string, idf double")
         p = self.index.postings.filter(F.col("term").isin(sorted({r[1] for r in rows})))
-        contrib = (
-            F.col("idf") * F.col("tf") * F.lit(k1 + 1.0)
-            / (F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avgdl)))
-        )
+        norm_len = self.bm25_norm_len(self.avgdl, k1, b)
+        contrib = self.bm25_contrib(F.col("idf"), F.col("tf"), norm_len, k1)
         scored = (
             p.join(F.broadcast(qdf), "term")
             .groupBy("query_id", "doc_id")

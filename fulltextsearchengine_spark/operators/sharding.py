@@ -24,16 +24,19 @@ the standard choice when queries are few-term and docs are many
 (term-sharded postings would route single-term queries to one node but
 skew badly on hot terms). The shard boundary is on BUCKET boundaries so
 compressed blocks never straddle shards.
+
+Cache misses: a new term is fetched once for all shards — one Spark job
+over the unfiltered blocks for every shard's missing terms, split on the
+driver by bucket range — so a miss costs what a single LocalBM25 miss
+costs, not one job per shard. Each shard then decodes its own slice.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .local_query import LocalBM25
+from .local_query import LocalBM25, fetch_blocks
 
 
 class ShardedBM25:
@@ -49,13 +52,13 @@ class ShardedBM25:
         bucket_range: int,
         n_shards: int = 4,
     ):
+        self.blocks = blocks
         n_buckets = max(1, -(-n_docs // bucket_range))
         per = -(-n_buckets // n_shards)
+        # [lo, hi) bucket range per shard; at most n_shards of them
+        self._ranges = [(lo, min(lo + per, n_buckets)) for lo in range(0, n_buckets, per)]
         self.shards: list[LocalBM25] = []
-        for s in range(n_shards):
-            lo, hi = s * per, min((s + 1) * per, n_buckets)
-            if lo >= hi:
-                break
+        for lo, hi in self._ranges:
             cond = (F.col("bucket") >= lo) & (F.col("bucket") < hi)
             self.shards.append(
                 LocalBM25(
@@ -69,8 +72,14 @@ class ShardedBM25:
             )
 
     def search(self, query: list[str], k: int) -> list[tuple[int, float]]:
-        """Fan out, k-merge: score desc, doc_id asc — identical to
-        LocalBM25.search over the unsharded index."""
+        """Fetch the shards' missing terms in one job, fan out, k-merge:
+        score desc, doc_id asc — identical to LocalBM25.search over the
+        unsharded index."""
+        missing = sorted({t for shard in self.shards for t in shard._missing(query)})
+        if missing:
+            pdf = fetch_blocks(self.blocks, missing)
+            for shard, (lo, hi) in zip(self.shards, self._ranges):
+                shard._decode(pdf[(pdf["bucket"] >= lo) & (pdf["bucket"] < hi)], missing)
         merged: list[tuple[float, int]] = []
         for shard in self.shards:
             merged.extend((-score, doc_id) for doc_id, score in shard.search(query, k))

@@ -26,8 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import bm25
 from .lexicon import build_fuzzy_index, deletion_variants
-from .search import BM25_B, BM25_K1, Searcher, normalize_query
+from .search import Searcher, normalize_query
 
 
 def _lev1(a: str, b: str) -> bool:
@@ -95,8 +96,8 @@ def spell_corrected_bm25_search(
     query: list[str],
     k: int,
     fuzzy_index: DataFrame | None = None,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    k1: float = bm25.K1,
+    b: float = bm25.B,
 ) -> DataFrame:
     """BM25 top-k over the spell-corrected query."""
     corrected, _ = spell_correct_query(searcher.index.terms, query, fuzzy_index)

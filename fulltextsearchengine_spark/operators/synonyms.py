@@ -23,8 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import bm25
 from .feedback import bm25_weighted_scores
-from .search import BM25_B, BM25_K1, Searcher, normalize_query
+from .search import Searcher, normalize_query
 
 SYN_WEIGHT = 0.5
 
@@ -57,8 +58,8 @@ def synonym_bm25_search(
     synonyms: dict[str, list[str]],
     k: int,
     syn_weight: float = SYN_WEIGHT,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    k1: float = bm25.K1,
+    b: float = bm25.B,
 ) -> DataFrame:
     """(doc_id, score) top-k under the synonym-expanded weighted BM25
     (score desc, doc_id asc)."""
@@ -133,8 +134,8 @@ def pmi_expanded_search(
     max_df: int = 10_000,
     syn_weight: float = SYN_WEIGHT,
     min_pair_count: int = 2,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    k1: float = bm25.K1,
+    b: float = bm25.B,
 ) -> DataFrame:
     """(doc_id, score) top-k BM25 with each query term expanded by its
     best corpus-PMI partner at ``syn_weight`` — the automatic analog of

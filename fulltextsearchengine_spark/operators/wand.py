@@ -62,10 +62,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from . import bm25
 from .posting_blocks import decode_block
-
-BM25_K1 = 1.2
-BM25_B = 0.75
 
 _META_COLS = ["term", "bucket", "block_id", "n", "max_impact", "first_doc_id"]
 _KERNEL_COLS = [
@@ -101,10 +99,6 @@ def _contrib(w: float, tfs: np.ndarray, dl: np.ndarray, avgdl: float, k1: float,
     return w * tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dl / avgdl))
 
 
-def _idf(n_docs: int, df: int) -> float:
-    return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-
-
 def _sql(v) -> str:
     """A SQL literal: bigint for integers, an escaped string otherwise."""
     if isinstance(v, (int, np.integer)):
@@ -129,15 +123,6 @@ def _norm_weights(weights, terms) -> dict[str, float]:
     if bad:
         raise ValueError(f"weights must be > 0: {bad}")
     return out
-
-
-def _query_terms(query: list[str], msm: int, qid=None) -> list[str]:
-    """Sorted distinct lowercase terms; rejects an unsatisfiable m."""
-    terms = sorted({t.lower() for t in query})
-    if not 1 <= msm <= max(len(terms), 1):
-        label = f"query terms {terms}" if qid is None else f"query {qid!r}"
-        raise ValueError(f"min_should_match {msm} out of [1, {len(terms)}] for {label}")
-    return terms
 
 
 def _tomb_array(tombstones) -> np.ndarray | None:
@@ -252,8 +237,8 @@ class WandSearcher:
         total_tokens: int,
         bucket_range: int,
         block_size: int = 128,
-        k1: float = BM25_K1,
-        b: float = BM25_B,
+        k1: float = bm25.K1,
+        b: float = bm25.B,
         seed_blocks: int = 32,
         max_terms: int = 100_000,
     ):
@@ -362,7 +347,7 @@ class WandSearcher:
         for t in terms:
             df = self._meta[t].df if term_stats is None else term_stats.get(t, 0)
             if df > 0:
-                w[t] = wts.get(t, 1.0) * _idf(self.n_docs, df)
+                w[t] = wts.get(t, 1.0) * bm25.idf(self.n_docs, df)
         if not w or len(w) < msm:
             return None
         theta = _seed_theta(
@@ -550,7 +535,7 @@ class WandSearcher:
         per-term ^N boosts, folded into idf (the cached per-term
         metadata is weight-independent — raw max_impacts — so boosts
         compose with a warm cache)."""
-        terms = _query_terms(query, min_should_match)
+        terms = bm25.query_terms(query, min_should_match)
         wts = _norm_weights(weights, terms)
         return self._run([(terms, min_should_match)], k, tombstones, {0: wts})[0][0]
 
@@ -572,7 +557,7 @@ class WandSearcher:
         else:
             msm_q = {qid: int(min_should_match) for qid in queries}
         qids = list(queries)
-        batch = [(_query_terms(queries[q], msm_q[q], q), msm_q[q]) for q in qids]
+        batch = [(bm25.query_terms(queries[q], msm_q[q], q), msm_q[q]) for q in qids]
         got, _ = self._run(batch, k, tombstones, term_stats=term_stats)
         return dict(zip(qids, got))
 
@@ -586,8 +571,8 @@ def bm25_topk_wand(
     total_tokens: int,
     bucket_range: int,
     block_size: int = 128,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    k1: float = bm25.K1,
+    b: float = bm25.B,
     term_stats: dict[str, int] | None = None,
     seed_blocks: int = 32,
     return_stats: bool = False,
@@ -639,7 +624,7 @@ def bm25_topk_wand(
     decodes ALL its blocks (exact score AND exact match count) while a
     dead-chunk doc is provably below θ, valid or not.
     """
-    terms = _query_terms(query, min_should_match)
+    terms = bm25.query_terms(query, min_should_match)
     wts = _norm_weights(weights, terms)
     ws = WandSearcher(
         blocks, slabs, n_docs, total_tokens, bucket_range, block_size, k1, b, seed_blocks
@@ -659,8 +644,8 @@ def bm25_topk_wand_batch(
     total_tokens: int,
     bucket_range: int,
     block_size: int = 128,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    k1: float = bm25.K1,
+    b: float = bm25.B,
     term_stats: dict[str, int] | None = None,
     seed_blocks: int = 32,
     tombstones=None,

@@ -21,13 +21,16 @@ Per stage we record:
   holds the stage's fingerprint: a hash of its parameters and of the
   fingerprints of the stages it reads. A stage resumes only when the
   fingerprint matches, so a changed parameter re-runs that stage and,
-  through the chained fingerprints, everything downstream of it.
+  through the chained fingerprints, everything downstream of it. The
+  stages that read the input DataFrame take its ``input_fingerprint``
+  as a parameter, so a build over other input never resumes either.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import re
 import time
 from collections.abc import Callable
 
@@ -55,6 +58,23 @@ def _lineage(data: DataFrame) -> DataFrame:
         .groupBy("file")
         .agg(F.count(F.lit(1)).alias("rows"), _checksum_agg())
     )
+
+
+def input_fingerprint(df: DataFrame) -> str:
+    """What a stage reading ``df`` depends on, computed without a Spark
+    job: the analyzed plan's text with expression ids masked, plus the
+    path, size and mtime of every file the plan reads. A plan that reads
+    no files (rows built on the driver) adds its ``semanticHash``, which
+    covers the rows. A file scan's ``semanticHash`` is left out: it
+    folds in JVM identity hash codes, so it changes from one process to
+    the next and would make every resume in a new process re-run."""
+    spark = df.sparkSession
+    plan = re.sub(r"#\d+", "#", df._jdf.queryExecution().analyzed().toString())
+    files = sorted(df.inputFiles())
+    parts = [plan, [(f, *hadoopfs.stat(spark, f)) for f in files]]
+    if not files:
+        parts.append(df.semanticHash())
+    return hashlib.sha256(json.dumps(parts).encode()).hexdigest()
 
 
 class StageRunner:
@@ -168,8 +188,11 @@ def build_index_checkpointed(
 
     # downstream stages chain from PERSISTED stage outputs — a stage
     # re-run recomputes only itself, never the tokenize/docID lineage
-    postings = runner.stage("postings", lambda s: ib.postings_layout(ib.invert(turns())))
-    docs = runner.stage("docs", lambda s: ib.docs_of(turns()))
+    source = {"input": input_fingerprint(transcripts)}
+    postings = runner.stage(
+        "postings", lambda s: ib.postings_layout(ib.invert(turns())), params=source
+    )
+    docs = runner.stage("docs", lambda s: ib.docs_of(turns()), params=source)
     if _cache.get("persisted") is not None:  # both consumers have run
         _cache.pop("persisted").unpersist()
     terms = runner.stage("terms", lambda s: ib.terms_of(postings), reads=("postings",))

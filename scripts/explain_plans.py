@@ -596,6 +596,19 @@ def main() -> None:
          *([] if same == "==" else ["msm exchange count == plain bm25"]),],
     ))
 
+    # AND is the same core with m = n: the intersection is the matched-
+    # slot Filter on the pivot, so it too adds no join and no exchange.
+    p = grab_plan(s.bm25_search_conjunctive(["spark", "join", "fast"], 10))
+    n_exchanges = p.count("Exchange")
+    same = "==" if n_exchanges == p_plain.count("Exchange") else "EXCEEDS"
+    sections.append((
+        f"BM25 conjunctive AND (m = n filter on the pivot, {n_exchanges} "
+        f"Exchange mentions {same} plain BM25's)", p,
+        ["PushedFilters: [In(term", "TakeOrderedAndProject",
+         "!BatchEvalPython", "!SortMergeJoin", "!BroadcastHashJoin",
+         *([] if same == "==" else ["and exchange count == plain bm25"]),],
+    ))
+
     # Round-4: nested boolean retrieval — the whole AND/OR/NOT tree
     # compiles to ONE Catalyst boolean filter over the pivot's tf slots
     # (negated terms ride the same scan); no join, no second exchange.

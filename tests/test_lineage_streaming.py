@@ -83,6 +83,36 @@ def test_resume_reruns_stage_with_new_params(spark, corpus, tmp_path_factory):
     assert r3.ran == ["terms"]
 
 
+def test_resume_reruns_on_other_input(spark, corpus, tmp_path_factory, count_jobs):
+    """A build over other input into an existing base re-runs every
+    stage instead of returning the old index; fingerprinting the input
+    itself runs no Spark job, so a fully resumed build still runs none
+    before it returns."""
+    from fulltextsearchengine_spark.datagen import make_transcripts
+    from fulltextsearchengine_spark.plans.lineage import (
+        build_index_checkpointed,
+        input_fingerprint,
+    )
+
+    base = str(tmp_path_factory.mktemp("ckpt4"))
+    build_index_checkpointed(spark, spark.createDataFrame(corpus, schema=TRANSCRIPT_SCHEMA), base)
+    other = spark.createDataFrame(
+        make_transcripts(n_turns=200, n_convs=20, vocab_size=300, seed=7), schema=TRANSCRIPT_SCHEMA
+    )
+    idx, _, r2 = build_index_checkpointed(spark, other, base)
+    assert r2.ran == ["postings", "docs", "terms", "conv_ranges", "stats", "blocks"]
+    assert idx.stats_row()["num_docs"] == 200
+
+    # a file-backed input: the fingerprint follows the files, costs no job
+    src = str(tmp_path_factory.mktemp("ckpt4_in") / "t")
+    other.write.parquet(src)
+    files = spark.read.parquet(src)  # the read infers the schema: a job
+    fp, jobs = count_jobs(lambda: input_fingerprint(files))
+    assert jobs == 0 and fp == input_fingerprint(spark.read.parquet(src))
+    other.limit(50).write.mode("overwrite").parquet(src)
+    assert input_fingerprint(spark.read.parquet(src)) != fp
+
+
 def test_streaming_incremental_index(spark, corpus, tmp_path_factory):
     """Two parquet drops → two segments; merged postings/stats equal the
     one-shot batch build over the concatenated corpus (modulo docID

@@ -269,6 +269,11 @@ def test_weighted_bm25_reduces_to_bm25_on_uniform_weights(setup):
     got_map = {r["doc_id"]: r["score"] for r in got}
     for d, s in exp:
         assert got_map[d] == pytest.approx(s, rel=1e-9)
+    # uniform 1.0 weights are bm25_scores bit for bit: one scorer
+    plain = searcher.bm25_scores(q).orderBy("doc_id").collect()
+    assert [(r["doc_id"], r["score"]) for r in got] == [
+        (r["doc_id"], r["score"]) for r in plain
+    ]
 
 
 # ---------------------------------------------------------------- proximity
@@ -396,12 +401,14 @@ def test_msm_bm25_rank_identity(setup):
 def test_msm_extremes_and_validation(setup):
     golden, searcher, _ = setup
     q = QUERIES[2]
-    def ids(df):
-        return [r["doc_id"] for r in df.collect()]
-    assert ids(searcher.bm25_search_msm(q, K, 1)) == ids(searcher.bm25_search(q, K))
-    assert ids(searcher.bm25_search_msm(q, K, len(q))) == ids(
+    def hits(df):
+        return [(r["doc_id"], r["score"]) for r in df.collect()]
+    assert hits(searcher.bm25_search_msm(q, K, 1)) == hits(searcher.bm25_search(q, K))
+    assert hits(searcher.bm25_search_msm(q, K, len(q))) == hits(
         searcher.bm25_search_conjunctive(q, K)
     )
+    # an empty AND query matches nothing (it does not raise)
+    assert searcher.bm25_search_conjunctive([], K).count() == 0
     # OOV terms satisfy nothing: if fewer than m terms are in-vocab -> empty
     assert searcher.bm25_search_msm(["aa", "zzzznotaterm"], K, 2).count() == 0
     with pytest.raises(ValueError):

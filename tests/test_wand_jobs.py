@@ -6,7 +6,8 @@ server reads them, so no cache materialization is counted.
 - WandSearcher.search over cached terms: 2 (the one-exchange scoring
   pass: a shuffle-map job and a result job);
 - bm25_topk_wand (cold): 4; bm25_topk_wand_batch: 4 for the whole batch;
-- LocalBM25.search with several new terms: 1."""
+- LocalBM25.search with several new terms: 1;
+- ShardedBM25.search with several new terms: 1 for all shards."""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ from fulltextsearchengine_spark.operators.posting_blocks import (
     build_doc_len_slabs,
     build_posting_blocks,
 )
+from fulltextsearchengine_spark.operators.sharding import ShardedBM25
 from fulltextsearchengine_spark.operators.wand import (
     WandSearcher,
     bm25_topk_wand,
@@ -85,4 +87,19 @@ def test_local_bm25_miss_is_one_job(served, count_jobs):
     got, miss = count_jobs(lambda: local.search(hot[:3], 10))
     assert got and miss == 1
     _, hit = count_jobs(lambda: local.search(hot[:3], 10))
+    assert hit == 0
+
+
+def test_sharded_bm25_miss_is_one_job(served, count_jobs):
+    blocks, slabs, term_df, hot, kw = served
+    router = ShardedBM25(
+        blocks, slabs, kw["n_docs"], kw["total_tokens"], term_df, BUCKET_RANGE, n_shards=4
+    )
+    assert len(router.shards) > 1
+    # a df=1 term has blocks in one shard only; the others must cache it
+    # as empty, or they would fetch it again on every query
+    q = hot[:3] + [min(term_df, key=lambda t: (term_df[t], t))]
+    got, miss = count_jobs(lambda: router.search(q, 10))
+    assert got and miss == 1
+    _, hit = count_jobs(lambda: router.search(q, 10))
     assert hit == 0
