@@ -15,7 +15,9 @@ standard public formulation:
 with idf(t) = ln((N − df_t + 0.5)/(df_t + 0.5) + 1) over CONVERSATION
 df (Lucene-style non-negative idf, same form as the turn-level BM25),
 N = number of conversations, and avglen_f = mean field length over the
-(conv, field) pairs where the field is present.
+(conv, field) pairs where the field is present. k1 and b are the
+constants ``BM25F_K1``/``BM25F_B``; no scorer here takes them as
+arguments.
 
 Scale shape (100 TB): the build is two hash aggregations over one
 tokenize scan — (conv, role, term) tf and (conv, role) field length —
@@ -101,8 +103,6 @@ def bm25f_scores(
     fidx: FieldIndex,
     query: list[str],
     weights: dict[str, float] | None = None,
-    k1: float = BM25F_K1,
-    b: float = BM25F_B,
 ) -> DataFrame:
     """(conv_id, score) for every conversation containing ≥1 query term
     (OR-union candidates, like every scorer in search.py)."""
@@ -125,7 +125,7 @@ def bm25f_scores(
     for role in sorted(fidx.avg_flen):
         w = float(weights.get(role, 0.0))
         w_col = F.when(F.col("role") == role, F.lit(w)).otherwise(w_col)
-    norm_col = _norm_col(fidx, b)
+    norm_col = _norm_col(fidx)
 
     fp = fidx.field_postings.filter(F.col("term").isin(terms))
     contrib = (
@@ -144,7 +144,7 @@ def bm25f_scores(
         idf_col = F.when(F.col("term") == t, F.lit(idf[t])).otherwise(idf_col)
     per_term = contrib.select(
         "conv_id",
-        (idf_col * F.col("tfw") / (F.lit(k1) + F.col("tfw"))).alias("s"),
+        (idf_col * F.col("tfw") / (F.lit(BM25F_K1) + F.col("tfw"))).alias("s"),
     )
     return per_term.groupBy("conv_id").agg(F.sum("s").alias("score"))
 
@@ -154,13 +154,11 @@ def bm25f_search(
     query: list[str],
     k: int = 10,
     weights: dict[str, float] | None = None,
-    k1: float = BM25F_K1,
-    b: float = BM25F_B,
 ) -> DataFrame:
     """Top-k conversations: score desc, conv_id asc —
     TakeOrderedAndProject, same top-k physical shape as Searcher.topk."""
     return (
-        bm25f_scores(fidx, query, weights=weights, k1=k1, b=b)
+        bm25f_scores(fidx, query, weights=weights)
         .orderBy(F.desc("score"), F.asc("conv_id"))
         .limit(k)
     )
@@ -171,18 +169,18 @@ def _empty(fidx: FieldIndex) -> DataFrame:
     return spark.createDataFrame([], "conv_id string, score double")
 
 
-def _norm_col(fidx: FieldIndex, b: float):
-    """1 − b + b·flen/avglen_f as a CASE over the role fields."""
+def _norm_col(fidx: FieldIndex):
+    """1 − b + b·flen/avglen_f (b = BM25F_B) as a CASE over the role fields."""
     norm_col = F.lit(1.0)
     for role, avg in sorted(fidx.avg_flen.items()):
         norm_col = F.when(
             F.col("role") == role,
-            F.lit(1.0 - b) + F.lit(b) * F.col("flen") / F.lit(avg),
+            F.lit(1.0 - BM25F_B) + F.lit(BM25F_B) * F.col("flen") / F.lit(avg),
         ).otherwise(norm_col)
     return norm_col
 
 
-def _per_field_scores(fidx, query, tie_breaker, k1, b, idf_col_of) -> DataFrame:
+def _per_field_scores(fidx, query, tie_breaker, idf_col_of) -> DataFrame:
     """The body dismax and cross_fields share: one pushed In(term,…)
     scan, per-(term, role) df collected driver-side (≤ |q|·|roles|
     rows), per-field BM25 with the idf CASE ``idf_col_of(df_rows)``
@@ -202,7 +200,7 @@ def _per_field_scores(fidx, query, tie_breaker, k1, b, idf_col_of) -> DataFrame:
     s = fp.join(fidx.field_lens, ["conv_id", "role"]).select(
         "conv_id",
         "term",
-        (idf_col * F.col("tf") / (F.col("tf") + F.lit(k1) * _norm_col(fidx, b))).alias("s"),
+        (idf_col * F.col("tf") / (F.col("tf") + F.lit(BM25F_K1) * _norm_col(fidx))).alias("s"),
     )
     per_term = s.groupBy("conv_id", "term").agg(
         F.max("s").alias("mx"), F.sum("s").alias("tot")
@@ -252,8 +250,6 @@ def dismax_scores(
     fidx: FieldIndex,
     query: list[str],
     tie_breaker: float = 0.0,
-    k1: float = BM25F_K1,
-    b: float = BM25F_B,
 ) -> DataFrame:
     """(conv_id, score) under best-fields dismax over the role fields."""
 
@@ -267,7 +263,7 @@ def dismax_scores(
             col = F.when((F.col("term") == t) & (F.col("role") == role), F.lit(v)).otherwise(col)
         return col
 
-    return _per_field_scores(fidx, query, tie_breaker, k1, b, idf_col)
+    return _per_field_scores(fidx, query, tie_breaker, idf_col)
 
 
 def dismax_search(
@@ -275,13 +271,11 @@ def dismax_search(
     query: list[str],
     k: int = 10,
     tie_breaker: float = 0.0,
-    k1: float = BM25F_K1,
-    b: float = BM25F_B,
 ) -> DataFrame:
     """Top-k conversations under dismax: score desc, conv_id asc
     (TakeOrderedAndProject, same shape as bm25f_search)."""
     return (
-        dismax_scores(fidx, query, tie_breaker=tie_breaker, k1=k1, b=b)
+        dismax_scores(fidx, query, tie_breaker=tie_breaker)
         .orderBy(F.desc("score"), F.asc("conv_id"))
         .limit(k)
     )
@@ -321,8 +315,6 @@ def cross_fields_scores(
     fidx: FieldIndex,
     query: list[str],
     tie_breaker: float = 0.0,
-    k1: float = BM25F_K1,
-    b: float = BM25F_B,
 ) -> DataFrame:
     """(conv_id, score) under cross-fields blended-df scoring."""
 
@@ -336,7 +328,7 @@ def cross_fields_scores(
             col = F.when(F.col("term") == t, F.lit(bm25.idf(n_blend, d))).otherwise(col)
         return col
 
-    return _per_field_scores(fidx, query, tie_breaker, k1, b, idf_col)
+    return _per_field_scores(fidx, query, tie_breaker, idf_col)
 
 
 def cross_fields_search(
@@ -344,12 +336,10 @@ def cross_fields_search(
     query: list[str],
     k: int = 10,
     tie_breaker: float = 0.0,
-    k1: float = BM25F_K1,
-    b: float = BM25F_B,
 ) -> DataFrame:
     """Top-k conversations under cross-fields: score desc, conv_id asc."""
     return (
-        cross_fields_scores(fidx, query, tie_breaker=tie_breaker, k1=k1, b=b)
+        cross_fields_scores(fidx, query, tie_breaker=tie_breaker)
         .orderBy(F.desc("score"), F.asc("conv_id"))
         .limit(k)
     )

@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import fold_query_text
+from . import bm25
 from .search import Searcher
 
 
@@ -331,7 +332,7 @@ def bool_search(
         piv = piv.filter(_to_column(folded, slot))
     # filter, don't re-weight: plain BM25 over the positive terms
     idf = {t: idf[t] for t in score_terms}
-    scores = piv.select("doc_id", Searcher.bm25_pivot_score(idf, searcher.avgdl, slot))
+    scores = piv.select("doc_id", bm25.pivot_score(idf, searcher.avgdl, slot))
     return Searcher.topk(scores, k)
 
 

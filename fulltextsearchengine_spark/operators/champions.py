@@ -50,13 +50,11 @@ def build_champion_lists(
     postings: DataFrame,
     n_champions: int = N_CHAMPIONS,
     avgdl: float | None = None,
-    k1: float = bm25.K1,
-    b: float = bm25.B,
 ) -> DataFrame:
     """(term, doc_id, tf) tier: per term the top-``n_champions`` postings
-    by STATIC BM25 IMPACT desc (tf·(k1+1)/(tf + k1·(1−b+b·len/avgdl)) —
-    the per-term score component, which is what the scorer actually
-    ranks by) when ``avgdl`` is given, else raw tf. Raw tf favors long
+    by STATIC BM25 IMPACT desc (the idf-free tf weight of bm25.py — the
+    per-term score component, which is what the scorer actually ranks
+    by) when ``avgdl`` is given, else raw tf. Raw tf favors long
     documents that BM25's length normalization then demotes — measured
     recall@10 on hot-term queries: 0.30 (tf) vs impact ordering (see
     bench ``champion_recall_at_10``). Ties: doc_id asc.
@@ -69,15 +67,7 @@ def build_champion_lists(
     if avgdl is None:
         rank_col = F.col("tf").cast("double")
     else:
-        rank_col = (
-            F.col("tf")
-            * F.lit(k1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avgdl))
-            )
-        )
+        rank_col = bm25.tf_weight_col(F.lit(1.0), F.col("tf"), bm25.length_norm_col(avgdl))
     w = Window.partitionBy("term").orderBy(F.desc(rank_col), F.asc("doc_id"))
     return (
         postings.select("term", "doc_id", "tf", "doc_len")
@@ -93,8 +83,6 @@ def champion_bm25_search(
     k: int,
     n_champions: int = N_CHAMPIONS,
     champions: DataFrame | None = None,
-    k1: float = bm25.K1,
-    b: float = bm25.B,
 ) -> DataFrame:
     """(doc_id, score) top-k over the champion candidate union —
     exact BM25 scoring restricted to tier candidates. Pass a persisted
@@ -103,14 +91,10 @@ def champion_bm25_search(
     if champions is None:
         st = searcher.stats
         avgdl = (st["total_tokens"] / st["num_docs"]) if st["num_docs"] else None
-        champions = build_champion_lists(
-            searcher.index.postings, n_champions, avgdl=avgdl, k1=k1, b=b
-        )
+        champions = build_champion_lists(searcher.index.postings, n_champions, avgdl=avgdl)
     cands = (
         champions.filter(F.col("term").isin(terms))
         .select("doc_id")
         .distinct()
     )
-    return searcher.topk(
-        searcher.bm25_scores(query, k1=k1, b=b, candidates=cands), k
-    )
+    return searcher.topk(searcher.bm25_scores(query, candidates=cands), k)

@@ -23,7 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import bm25
 from .search import Searcher
 
 
@@ -32,8 +31,6 @@ def collapsed_bm25_search(
     query: list[str] | None = None,
     k: int = 10,
     per_conv: int = 1,
-    k1: float = bm25.K1,
-    b: float = bm25.B,
     scores: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, conv_id, score) top-k, ≤ ``per_conv`` rows per conv_id;
@@ -47,7 +44,7 @@ def collapsed_bm25_search(
     if (query is None) == (scores is None):
         raise ValueError("pass exactly one of query= or scores=")
     if scores is None:
-        scores = searcher.bm25_scores(query, k1=k1, b=b)
+        scores = searcher.bm25_scores(query)
     with_conv = scores.join(
         searcher.index.docs.select("doc_id", "conv_id"), "doc_id"
     )

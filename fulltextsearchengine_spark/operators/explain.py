@@ -23,24 +23,16 @@ from . import bm25
 from .search import Searcher, normalize_query
 
 
-def explain_bm25(
-    searcher: Searcher,
-    query: list[str],
-    k: int,
-    k1: float = bm25.K1,
-    b: float = bm25.B,
-) -> DataFrame:
+def explain_bm25(searcher: Searcher, query: list[str], k: int) -> DataFrame:
     """One row per (doc_id, term) with term present in a top-k doc:
     (doc_id, term, tf, doc_len, df, idf, contrib, score) where
-    contrib = idf·tf·(k1+1)/(tf + k1·(1−b+b·doc_len/avgdl)) and score
+    contrib = idf·tf·(K1+1)/(tf + K1·(1−B+B·doc_len/avgdl)) and score
     is the doc's total (the sum of its contribs — absent query terms
     contribute exactly 0 in BM25, so rows are emitted only for matches).
     """
     stats = searcher.term_stats(normalize_query(query))
     idf = searcher.bm25_idf(stats)
-    top = searcher.topk(
-        searcher.bm25_scores(query, k1=k1, b=b), k
-    )  # (doc_id, score), k rows
+    top = searcher.topk(searcher.bm25_scores(query), k)  # (doc_id, score), k rows
     # an all-OOV query scans In(term, []): the optimizer folds it to an
     # empty relation with the same columns
     p = searcher.postings_for(sorted(idf)).join(
@@ -51,8 +43,7 @@ def explain_bm25(
     for t in sorted(idf):
         df_col = F.when(F.col("term") == t, F.lit(stats[t][0])).otherwise(df_col)
         idf_col = F.when(F.col("term") == t, F.lit(idf[t])).otherwise(idf_col)
-    norm_len = Searcher.bm25_norm_len(searcher.avgdl, k1, b)
-    contrib = Searcher.bm25_contrib(idf_col, F.col("tf"), norm_len, k1)
+    contrib = bm25.tf_weight_col(idf_col, F.col("tf"), bm25.length_norm_col(searcher.avgdl))
     return p.select(
         "doc_id",
         "term",

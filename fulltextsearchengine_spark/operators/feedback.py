@@ -86,11 +86,9 @@ def rm3_expand(
 def bm25_weighted_scores(
     searcher: Searcher,
     weights: dict[str, float],
-    k1: float = bm25.K1,
-    b: float = bm25.B,
     min_should_match: int = 1,
 ) -> DataFrame:
-    """(doc_id, score): Σ_t w_t · idf_t · tf(k1+1)/(tf + k1(1−b+b·len/avgdl))
+    """(doc_id, score): Σ_t w_t · idf_t · tf(K1+1)/(tf + K1(1−B+B·len/avgdl))
     — bm25_scores with a per-term multiplier: the Searcher's one BM25
     core with the weight folded into idf, so the plan is bm25_scores'.
     ``min_should_match``: m-of-n distinct-term matching over the
@@ -98,7 +96,7 @@ def bm25_weighted_scores(
     query-time boosts (queryparse ``term^2.5``) compose with ``mm:N``."""
     boosts = {t.lower(): w for t, w in weights.items() if w > 0.0}
     terms = bm25.query_terms(boosts, min_should_match)
-    return searcher._bm25(terms, min_should_match, boosts, k1=k1, b=b)
+    return searcher._bm25(terms, min_should_match, boosts)
 
 
 def query_clarity(

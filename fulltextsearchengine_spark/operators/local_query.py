@@ -45,8 +45,6 @@ class LocalBM25:
         n_docs: int,
         total_tokens: int,
         term_df: dict[str, int],
-        k1: float = bm25.K1,
-        b: float = bm25.B,
         bucket_range: int | None = None,
     ):
         """``slabs`` is the build-time doc_len sidecar
@@ -58,7 +56,6 @@ class LocalBM25:
         self.n_docs = n_docs
         self.avgdl = total_tokens / n_docs if n_docs else 1.0
         self.term_df = term_df
-        self.k1, self.b = k1, b
         # doc_len array indexed by doc_id (the fixed-record-store analog,
         # storage/FixedRecordStorage.java:89-101 — O(1) length lookup),
         # assembled from the packed per-bucket slabs
@@ -128,17 +125,16 @@ class LocalBM25:
             ids = np.concatenate([p[0] for p in parts])
             tfs = np.concatenate([p[1] for p in parts])
             dl = self.doc_lens[ids]
-            # idf-free contribution precomputed once per term:
-            # contrib0 = tf·(k1+1)/denom; the query does one fused
-            # multiply-add w·contrib0. Association differs from the
-            # analytic path's ((w·tf)·(k1+1))/denom by ≤ a few ulps —
-            # docs with equal (tf, doc_len) still get bit-equal scores,
-            # so doc_id tie-breaking is unaffected; cross-pair bit
-            # collisions at ulp scale are the only (measure-zero) rank
-            # risk. Locked by test_local_bm25_server (exact ranks,
-            # rel=1e-9 scores).
-            denom = tfs + self.k1 * (1.0 - self.b + self.b * dl / self.avgdl)
-            contrib0 = tfs * (self.k1 + 1.0) / denom
+            # idf-free contribution precomputed once per term (the
+            # max_impact weight): contrib0 = tf·(K1+1)/denom; the query
+            # does one fused multiply-add w·contrib0. Association
+            # differs from the analytic path's ((w·tf)·(K1+1))/denom by
+            # ≤ a few ulps — docs with equal (tf, doc_len) still get
+            # bit-equal scores, so doc_id tie-breaking is unaffected;
+            # cross-pair bit collisions at ulp scale are the only
+            # (measure-zero) rank risk. Locked by test_local_bm25_server
+            # (exact ranks, rel=1e-9 scores).
+            contrib0 = bm25.tf_weight(1.0, tfs, dl, self.avgdl)
             # bucket-relative ids precomputed once (query-time scatter
             # needs no subtraction); asserts the bucket_range contract
             base = bkt * self.bucket_range + 1

@@ -20,10 +20,9 @@ globally doc_id-ascending when ordered by (bucket, block_in_bucket) —
 unlike hash salting, which would interleave ranges.
 
 Each block carries ``first_doc_id``, ``last_doc_id``, ``max_tf`` and
-``max_impact`` (the length-normalized BM25 tf-side upper bound
-tf·(k1+1)/(tf+k1·(1−b+b·len/avgdl)), to be multiplied by idf at query
-time) — the block-max metadata driving WAND-style block skipping
-(wand.py).
+``max_impact`` (the block's largest idf-free BM25 tf weight,
+bm25.tf_weight with w = 1, to be multiplied by idf at query time) —
+the block-max metadata driving WAND-style block skipping (wand.py).
 """
 
 from __future__ import annotations
@@ -93,9 +92,6 @@ def build_posting_blocks(
     avgdl: float,
     block_size: int = DEFAULT_BLOCK_SIZE,
     bucket_range: int = DEFAULT_BUCKET_RANGE,
-    k1: float = bm25.K1,
-    b: float = bm25.B,
-    group_range: int | None = None,
 ) -> DataFrame:
     """postings(term, doc_id, tf, doc_len) → compressed block table.
 
@@ -103,37 +99,30 @@ def build_posting_blocks(
     ``applyInPandas``. blocks_per_bucket block_ids keep (bucket, local)
     ordering globally doc_id-ascending per term.
 
-    GROUPING granularity and BUCKET granularity are independent knobs
-    (r5): the shuffle groups on ``(term, (doc_id-1)//group_range)`` —
-    group_range defaults to max(bucket_range, DEFAULT_BUCKET_RANGE), so
-    per-task postings stay capped at ~4M (hot-term skew bound) and the
+    GROUPING granularity is coarser than BUCKET granularity (r5): the
+    shuffle groups on ``(term, (doc_id-1)//group_range)`` with
+    group_range = max(bucket_range, DEFAULT_BUCKET_RANGE), so per-task
+    postings stay capped at ~4M (hot-term skew bound) and the
     applyInPandas group count stays low (the 0.2 ms/group overhead made
     a docs/512 grouping 10× slower at 1M docs). Inside a group, blocks
     are cut per ``bucket_range`` sub-range — the fine granularity WAND's
     bucket pruning wants (auto_bucket_range ≈ docs/512) — by numpy
-    boundary splits, costing no extra groups. Output is byte-identical
-    to grouping directly on (term, bucket).
+    boundary splits, costing no extra groups. A bucket_range that does
+    not divide that group_range (not a power of two) groups per bucket
+    instead. Output is byte-identical to grouping directly on
+    (term, bucket).
     """
     blocks_per_bucket = -(-bucket_range // block_size)
-    if group_range is None:
-        group_range = max(bucket_range, DEFAULT_BUCKET_RANGE)
-        if group_range % bucket_range != 0:
-            # non-power-of-two bucket_range: fall back to one group per
-            # bucket (the pre-r5 behavior) rather than reject the call —
-            # only the derived default must nest, not the user's bucket.
-            group_range = bucket_range
+    group_range = max(bucket_range, DEFAULT_BUCKET_RANGE)
     if group_range % bucket_range != 0:
-        raise ValueError(
-            f"group_range {group_range} must be a multiple of "
-            f"bucket_range {bucket_range} so buckets nest in groups"
-        )
+        group_range = bucket_range
 
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id", kind="mergesort")
         doc_ids = pdf["doc_id"].to_numpy(np.int64)
         tfs = pdf["tf"].to_numpy(np.int64)
         lens = pdf["doc_len"].to_numpy(np.float64)
-        impact = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * lens / avgdl))
+        impact = bm25.tf_weight(1.0, tfs, lens, avgdl)
         term = pdf["term"].iat[0]
         buckets = (doc_ids - 1) // bucket_range
         # consecutive-run boundaries: one slice per bucket in this group

@@ -30,6 +30,7 @@ from collections import Counter
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import bm25
 from .search import LM_DIRICHLET_MU, Searcher, normalize_query
 
 
@@ -77,7 +78,7 @@ def rescore_search(
         )
     piv = searcher._pivoted_tf(terms)
     slot = {t: f"tf_{i}" for i, t in enumerate(terms)}
-    first = searcher.bm25_pivot_score(idf, searcher.avgdl, slot)
+    first = bm25.pivot_score(idf, searcher.avgdl, slot)
     if second_scores is None:
         # Dirichlet QL off the same pivot
         second = searcher.dirichlet_pivot_score(qtf, stats, total, mu, slot)

@@ -3,7 +3,7 @@
 Three scorers over one index:
 - lnn.ltc vector space  (ReviewSearch.java:27-104 semantics)
 - Jelinek–Mercer unigram LM, λ=0.5 (ReviewSearch.java:146-199)
-- BM25 (north-star scale path; k1, b and idf from bm25.py)
+- BM25 (north-star scale path; K1, B, idf and the tf weight from bm25.py)
 plus conv_search, the productSearch analog (ReviewSearch.java:235-284).
 
 One BM25 core (``Searcher._bm25``) serves every BM25 variant: OR
@@ -151,34 +151,6 @@ class Searcher:
             matched = matched + F.col(f"tf_{i}").isNotNull().cast("int")
         return matched
 
-    @staticmethod
-    def bm25_norm_len(avgdl, k1=bm25.K1, b=bm25.B) -> Column:
-        """k1·(1−b+b·doc_len/avgdl), the BM25 length norm, as a Column."""
-        return F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avgdl))
-
-    @staticmethod
-    def bm25_contrib(idf: Column, tf: Column, norm_len: Column, k1=bm25.K1) -> Column:
-        """idf·tf·(k1+1)/(tf + norm_len): one term's BM25 contribution as
-        a Column, in the oracle's operation order. Build ``norm_len``
-        (``bm25_norm_len``) once per query: each Column op is a py4j call."""
-        return idf * tf * F.lit(k1 + 1.0) / (tf + norm_len)
-
-    @staticmethod
-    def bm25_pivot_score(idf, avgdl, slot, k1=bm25.K1, b=bm25.B):
-        """Σ_t idf·tf·(k1+1)/(tf + k1·(1−b+b·len/avgdl)) as one Column
-        over a (doc_id, doc_len, tf-slot…) pivot — THE BM25-over-pivot
-        expression, shared by the BM25 core, rescore and boolquery, so
-        the math lives in exactly one place. Terms add in
-        sorted order (reproducible float sums, oracle-identical);
-        missing slots coalesce to 0 (a no-op on pre-filtered pivots
-        whose slots are all non-null)."""
-        norm_len = Searcher.bm25_norm_len(avgdl, k1, b)
-        score = F.lit(0.0)
-        for t in sorted(idf):
-            contrib = Searcher.bm25_contrib(F.lit(idf[t]), F.col(slot[t]), norm_len, k1)
-            score = score + F.coalesce(contrib, F.lit(0.0))
-        return score.alias("score")
-
     def _query_ltc(self, query: list[str]) -> dict[str, float]:
         """ltc query vector, driver-side — exact ReviewSearch.queryLtc
         math (ReviewSearch.java:27-58): (1+log10 tf)·log10(N/df), df=0
@@ -230,8 +202,6 @@ class Searcher:
         min_should_match: int = 1,
         boosts: dict[str, float] | None = None,
         candidates: DataFrame | None = None,
-        k1: float = bm25.K1,
-        b: float = bm25.B,
     ) -> DataFrame:
         """The BM25 core: (doc_id, score) over the docs holding at least
         ``min_should_match`` of the in-vocab ``terms``, each term weighted
@@ -248,20 +218,18 @@ class Searcher:
         if min_should_match > 1:
             piv = piv.filter(self._matched(len(terms)) >= F.lit(min_should_match))
         slot = {t: f"tf_{i}" for i, t in enumerate(terms)}
-        return piv.select("doc_id", self.bm25_pivot_score(w, self.avgdl, slot, k1, b))
+        return piv.select("doc_id", bm25.pivot_score(w, self.avgdl, slot))
 
     def bm25_scores(
         self,
         query: list[str],
-        k1: float = bm25.K1,
-        b: float = bm25.B,
         candidates: DataFrame | None = None,
     ) -> DataFrame:
-        """(doc_id, score): Σ_t idf·tf·(k1+1)/(tf + k1·(1−b+b·len/avgdl)).
+        """(doc_id, score): Σ_t idf·tf·(K1+1)/(tf + K1·(1−B+B·len/avgdl)).
         ``candidates`` restricts the scored docs (semi-join pre-pivot) —
         scoring math (global df/avgdl) is unchanged: filter, don't
         re-weight."""
-        return self._bm25(bm25.query_terms(query), candidates=candidates, k1=k1, b=b)
+        return self._bm25(bm25.query_terms(query), candidates=candidates)
 
     def lm_scores(self, query: list[str], lam: float = LM_LAMBDA) -> DataFrame:
         """(doc_id, score): Π over DISTINCT query terms of
@@ -382,8 +350,6 @@ class Searcher:
         k: int,
         role: str | None = None,
         conv_prefix: str | None = None,
-        k1: float = bm25.K1,
-        b: float = bm25.B,
     ) -> DataFrame:
         """BM25 top-k restricted to turns matching metadata predicates
         (role, conv_id prefix). Scoring semantics are unchanged (global
@@ -391,7 +357,7 @@ class Searcher:
         convention); the candidate set is pre-filtered with a join
         against the pruned docs scan, so the predicate pushes down to
         the docs parquet and the postings scan stays term-pruned."""
-        scores = self.bm25_scores(query, k1=k1, b=b)
+        scores = self.bm25_scores(query)
         d = self.index.docs
         if role is not None:
             d = d.filter(F.col("role") == role)
@@ -400,13 +366,7 @@ class Searcher:
         filtered = scores.join(d.select("doc_id"), "doc_id", "left_semi")
         return self.topk(filtered, k)
 
-    def bm25_search_conjunctive(
-        self,
-        query: list[str],
-        k: int,
-        k1: float = bm25.K1,
-        b: float = bm25.B,
-    ) -> DataFrame:
+    def bm25_search_conjunctive(self, query: list[str], k: int) -> DataFrame:
         """AND-semantics BM25 top-k: only docs containing EVERY query
         term score (the posting-list-intersection processing mode; the
         OR-union scorers are the disjunctive mode WAND accelerates).
@@ -418,32 +378,19 @@ class Searcher:
         extra join). Any OOV term (df=0) empties the result by
         definition of AND; an empty query matches nothing."""
         terms = bm25.query_terms(query)
-        return self.topk(self._bm25(terms, max(len(terms), 1), k1=k1, b=b), k)
+        return self.topk(self._bm25(terms, max(len(terms), 1)), k)
 
     def bm25_search_msm(
-        self,
-        query: list[str],
-        k: int,
-        min_should_match: int,
-        k1: float = bm25.K1,
-        b: float = bm25.B,
+        self, query: list[str], k: int, min_should_match: int
     ) -> DataFrame:
         """Minimum-should-match BM25 top-k: only docs containing at
         least ``min_should_match`` DISTINCT query terms score — the
         Lucene/Elasticsearch ``minimum_should_match`` knob, the dial
         between this engine's OR-union scorers (m=1) and
         ``bm25_search_conjunctive`` (m=n)."""
-        return self.topk(
-            self.bm25_scores_msm(query, min_should_match, k1=k1, b=b), k
-        )
+        return self.topk(self.bm25_scores_msm(query, min_should_match), k)
 
-    def bm25_scores_msm(
-        self,
-        query: list[str],
-        min_should_match: int,
-        k1: float = bm25.K1,
-        b: float = bm25.B,
-    ) -> DataFrame:
+    def bm25_scores_msm(self, query: list[str], min_should_match: int) -> DataFrame:
         """(doc_id, score) for docs matching ≥ ``min_should_match``
         DISTINCT query terms. Scores equal ``bm25_scores`` on the
         surviving docs: m changes the candidate set, never the math
@@ -460,9 +407,7 @@ class Searcher:
         driver-built sum of null-checks over the pivot's tf slots, so
         no extra join or exchange appears (scripts/explain_plans.py
         asserts the shape for m = 2 and for the AND specialization)."""
-        return self._bm25(
-            bm25.query_terms(query, min_should_match), min_should_match, k1=k1, b=b
-        )
+        return self._bm25(bm25.query_terms(query, min_should_match), min_should_match)
 
     def match_counts(self, query: list[str]) -> DataFrame:
         """(min_should_match, n_hits): the ES ``_count`` API generalized
@@ -499,13 +444,7 @@ class Searcher:
         )
 
     # ---- batched multi-query scoring (beyond the reference) ------------
-    def bm25_search_batch(
-        self,
-        queries: dict[str, list[str]],
-        k: int,
-        k1: float = bm25.K1,
-        b: float = bm25.B,
-    ) -> DataFrame:
+    def bm25_search_batch(self, queries: dict[str, list[str]], k: int) -> DataFrame:
         """(query_id, doc_id, score, rank): BM25 top-k for MANY queries
         in ONE Spark job — the analytical shape the single-query
         reference cannot express. Query terms (with driver-computed idf)
@@ -528,8 +467,7 @@ class Searcher:
             )
         qdf = spark.createDataFrame(rows, "query_id string, term string, idf double")
         p = self.index.postings.filter(F.col("term").isin(sorted({r[1] for r in rows})))
-        norm_len = self.bm25_norm_len(self.avgdl, k1, b)
-        contrib = self.bm25_contrib(F.col("idf"), F.col("tf"), norm_len, k1)
+        contrib = bm25.tf_weight_col(F.col("idf"), F.col("tf"), bm25.length_norm_col(self.avgdl))
         scored = (
             p.join(F.broadcast(qdf), "term")
             .groupBy("query_id", "doc_id")

@@ -26,7 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import bm25
 from .lexicon import build_fuzzy_index, deletion_variants
 from .search import Searcher, normalize_query
 
@@ -96,9 +95,7 @@ def spell_corrected_bm25_search(
     query: list[str],
     k: int,
     fuzzy_index: DataFrame | None = None,
-    k1: float = bm25.K1,
-    b: float = bm25.B,
 ) -> DataFrame:
     """BM25 top-k over the spell-corrected query."""
     corrected, _ = spell_correct_query(searcher.index.terms, query, fuzzy_index)
-    return searcher.topk(searcher.bm25_scores(corrected, k1=k1, b=b), k)
+    return searcher.topk(searcher.bm25_scores(corrected), k)

@@ -23,7 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import bm25
 from .feedback import bm25_weighted_scores
 from .search import Searcher, normalize_query
 
@@ -58,14 +57,12 @@ def synonym_bm25_search(
     synonyms: dict[str, list[str]],
     k: int,
     syn_weight: float = SYN_WEIGHT,
-    k1: float = bm25.K1,
-    b: float = bm25.B,
 ) -> DataFrame:
     """(doc_id, score) top-k under the synonym-expanded weighted BM25
     (score desc, doc_id asc)."""
     weights = expand_with_synonyms(query, synonyms, syn_weight)
     return (
-        bm25_weighted_scores(searcher, weights, k1=k1, b=b)
+        bm25_weighted_scores(searcher, weights)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
@@ -134,14 +131,10 @@ def pmi_expanded_search(
     max_df: int = 10_000,
     syn_weight: float = SYN_WEIGHT,
     min_pair_count: int = 2,
-    k1: float = bm25.K1,
-    b: float = bm25.B,
 ) -> DataFrame:
     """(doc_id, score) top-k BM25 with each query term expanded by its
     best corpus-PMI partner at ``syn_weight`` — the automatic analog of
     ``synonym_bm25_search``'s config thesaurus."""
     nbrs = pmi_neighbors(searcher, query, min_df, max_df, min_pair_count)
     synonyms = {q: [n] for q, n in nbrs.items()}
-    return synonym_bm25_search(
-        searcher, query, synonyms, k, syn_weight=syn_weight, k1=k1, b=b
-    )
+    return synonym_bm25_search(searcher, query, synonyms, k, syn_weight=syn_weight)

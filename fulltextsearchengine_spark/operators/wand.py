@@ -16,13 +16,13 @@ one, so ``bm25_topk_wand``, ``bm25_topk_wand_batch`` and
      job 1 scans just the metadata columns (term, bucket, block_id, n,
      max_impact, first_doc_id) of the missing terms; from those rows
      the driver derives df, per-(term, bucket) max impact and block
-     count, and each term's ``seed_blocks`` highest-impact block ids
+     count, and each term's ``SEED_BLOCKS`` highest-impact block ids
      (within a term idf is constant, so impact ORDER needs no weights —
      what makes the cache query-independent). Job 2 is one union scan
      of those seed blocks' payload plus the seed buckets' doc_len slabs
      not cached yet.
   2. THRESHOLD SEED + BUCKET SKIP (driver, no job): the query's global
-     top ``seed_blocks`` blocks by idf·max_impact (a subset of the
+     top ``SEED_BLOCKS`` blocks by idf·max_impact (a subset of the
      per-term pools) are summed per doc in sorted-term order; the k-th
      best partial sum is a lower bound on the true k-th best total
      (BM25 contributions are non-negative), nudged down by 1e-9
@@ -71,6 +71,8 @@ _KERNEL_COLS = [
     "gaps_ctrl", "gaps_data", "tfs_ctrl", "tfs_data",
 ]
 _SLAB_COLS = ["bucket", "base", "lens"]
+# blocks per query (and cached per term) that seed θ
+SEED_BLOCKS = 32
 _OUT_SCHEMA = T.StructType([
     T.StructField("q", T.LongType()),
     T.StructField("doc_id", T.LongType()),
@@ -93,10 +95,6 @@ def topk_select(cand: np.ndarray, scores: np.ndarray, k: int):
     order = np.lexsort((cand[above], -scores[above]))[:k]
     keep = above[order]
     return cand[keep], scores[keep]
-
-
-def _contrib(w: float, tfs: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float):
-    return w * tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dl / avgdl))
 
 
 def _sql(v) -> str:
@@ -178,9 +176,9 @@ class _Plan(NamedTuple):
     stats: dict
 
 
-def _seed_theta(w, seeds_of, k, msm, tomb, seed_blocks, avgdl, k1, b) -> float:
+def _seed_theta(w, seeds_of, k, msm, tomb, avgdl) -> float:
     """θ for one query: the k-th best partial score over the query's
-    ``seed_blocks`` highest w·max_impact blocks (ties by term, block_id),
+    ``SEED_BLOCKS`` highest w·max_impact blocks (ties by term, block_id),
     added in sorted-term order, minus 1e-9 relative slack. It is a valid
     lower bound on the k-th best live, m-matching score: contributions
     are non-negative; a doc's observed match count is ≤ its true count,
@@ -189,12 +187,12 @@ def _seed_theta(w, seeds_of, k, msm, tomb, seed_blocks, avgdl, k1, b) -> float:
     pool = sorted(
         ((-(wt * s.max_impact), t, s.block_id, s) for t, wt in w.items() for s in seeds_of(t)),
         key=lambda x: x[:3],
-    )[:seed_blocks]
+    )[:SEED_BLOCKS]
     if not pool:
         return -math.inf
     pool.sort(key=lambda x: x[1])  # stable: sorted-term add order
     ids = np.concatenate([s.ids for *_, s in pool])
-    contrib = np.concatenate([_contrib(w[t], s.tfs, s.dl, avgdl, k1, b) for _, t, _, s in pool])
+    contrib = np.concatenate([bm25.tf_weight(w[t], s.tfs, s.dl, avgdl) for _, t, _, s in pool])
     uniq, inv = np.unique(ids, return_inverse=True)
     acc = np.zeros(len(uniq), dtype=np.float64)
     np.add.at(acc, inv, contrib)  # in pool order per doc
@@ -220,7 +218,7 @@ class WandSearcher:
     memory across queries (Dictionary.java:74-79 loads the whole
     front-coded term file once; every query then binary-searches RAM):
     per term we cache df, per-bucket max impact + block counts and the
-    ``seed_blocks`` highest-impact blocks decoded (with their doc
+    ``SEED_BLOCKS`` highest-impact blocks decoded (with their doc
     lengths); doc_len slabs of seed buckets are cached so later fills
     skip them. All of it is metadata-sized and query-independent, so θ
     seeding and bucket pruning run as driver numpy over the cache.
@@ -237,9 +235,6 @@ class WandSearcher:
         total_tokens: int,
         bucket_range: int,
         block_size: int = 128,
-        k1: float = bm25.K1,
-        b: float = bm25.B,
-        seed_blocks: int = 32,
         max_terms: int = 100_000,
     ):
         self.blocks = blocks
@@ -251,8 +246,6 @@ class WandSearcher:
         self.total_tokens = int(total_tokens)
         self.bucket_range = int(bucket_range)
         self.block_size = int(block_size)
-        self.k1, self.b = k1, b
-        self.seed_blocks = int(seed_blocks)
         self.max_terms = int(max_terms)
         self.avgdl = self.total_tokens / self.n_docs if self.n_docs else 0.0
         self._meta: dict[str, _TermMeta] = {}
@@ -284,7 +277,7 @@ class WandSearcher:
             for s, e in zip(np.r_[0, bounds].astype(int), np.r_[bounds, len(pdf)].astype(int))
             if e > s
         }
-        top = {t: slice(s, min(e, s + self.seed_blocks)) for t, (s, e) in spans.items()}
+        top = {t: slice(s, min(e, s + SEED_BLOCKS)) for t, (s, e) in spans.items()}
         seed_buckets = {int(x) for sl in top.values() for x in bucket[sl]}
 
         # job 2: the seed blocks' payload ∪ uncached seed-bucket slabs; a
@@ -317,7 +310,7 @@ class WandSearcher:
         for t in missing:
             s, e = spans.get(t, (0, 0))
             seeds = []
-            for j in range(s, min(e, s + self.seed_blocks)):
+            for j in range(s, min(e, s + SEED_BLOCKS)):
                 r = payload.get((t, int(first[j])))
                 sl = self._slab_cache.get(int(bucket[j]))
                 if r is None or sl is None:
@@ -350,10 +343,7 @@ class WandSearcher:
                 w[t] = wts.get(t, 1.0) * bm25.idf(self.n_docs, df)
         if not w or len(w) < msm:
             return None
-        theta = _seed_theta(
-            w, lambda t: self._meta[t].seeds, k, msm, tomb,
-            self.seed_blocks, self.avgdl, self.k1, self.b,
-        )
+        theta = _seed_theta(w, lambda t: self._meta[t].seeds, k, msm, tomb, self.avgdl)
         metas = [self._meta[t] for t in w]
         buckets = np.unique(np.concatenate([m.buckets for m in metas]))
         ub = np.zeros(len(buckets), dtype=np.float64)
@@ -398,7 +388,7 @@ class WandSearcher:
         msm_q = [p.msm for p in plans]
         surv_q = [set(p.surviving.tolist()) for p in plans]
         # locals only: the kernel closure is pickled and must not capture self
-        avgdl, k1, b = self.avgdl, self.k1, self.b
+        avgdl = self.avgdl
         chunk = self.block_size
         n_chunks = -(-self.bucket_range // chunk)
 
@@ -453,7 +443,7 @@ class WandSearcher:
                     wt = w_q[q][row.term]
                     c = contribs.get(wt)
                     if c is None:
-                        c = contribs[wt] = _contrib(wt, tfs, dl, avgdl, k1, b)
+                        c = contribs[wt] = bm25.tf_weight(wt, tfs, dl, avgdl)
                     acc[q][ids] += c
                     touched[q][ids] = True
                     if q in nmatch:
@@ -571,10 +561,7 @@ def bm25_topk_wand(
     total_tokens: int,
     bucket_range: int,
     block_size: int = 128,
-    k1: float = bm25.K1,
-    b: float = bm25.B,
     term_stats: dict[str, int] | None = None,
-    seed_blocks: int = 32,
     return_stats: bool = False,
     explain_out: list | None = None,
     tombstones=None,
@@ -626,9 +613,7 @@ def bm25_topk_wand(
     """
     terms = bm25.query_terms(query, min_should_match)
     wts = _norm_weights(weights, terms)
-    ws = WandSearcher(
-        blocks, slabs, n_docs, total_tokens, bucket_range, block_size, k1, b, seed_blocks
-    )
+    ws = WandSearcher(blocks, slabs, n_docs, total_tokens, bucket_range, block_size)
     got, stats = ws._run(
         [(terms, min_should_match)], k, tombstones, {0: wts}, term_stats, return_stats, explain_out
     )
@@ -644,10 +629,7 @@ def bm25_topk_wand_batch(
     total_tokens: int,
     bucket_range: int,
     block_size: int = 128,
-    k1: float = bm25.K1,
-    b: float = bm25.B,
     term_stats: dict[str, int] | None = None,
-    seed_blocks: int = 32,
     tombstones=None,
     min_should_match: int | dict = 1,
 ) -> dict[str, list[tuple[int, float]]]:
@@ -668,7 +650,5 @@ def bm25_topk_wand_batch(
     exactness argument as the single-query path; each m-filtered query
     adds a 4·bucket_range-byte match-count array in-task.
     """
-    ws = WandSearcher(
-        blocks, slabs, n_docs, total_tokens, bucket_range, block_size, k1, b, seed_blocks
-    )
+    ws = WandSearcher(blocks, slabs, n_docs, total_tokens, bucket_range, block_size)
     return ws.search_batch(queries, k, tombstones, min_should_match, term_stats)

@@ -3,7 +3,10 @@
 Local-mode defaults mirror what we'd set on a real cluster: AQE on
 (runtime skew-join splitting + partition coalescing), Arrow on (every
 Python boundary is Arrow-batched), shuffle partitions sized to cores
-rather than the 200 default.
+rather than the 200 default. The driver heap defaults to half of the
+host's physical memory, at most 16g, so the heap leaves room for a
+second Spark process on the same host; ``SPARK_DRIVER_MEMORY``
+overrides it.
 """
 
 from __future__ import annotations
@@ -11,6 +14,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+MAX_DRIVER_MEMORY_MB = 16 * 1024
+
+
+def _default_driver_memory() -> str:
+    """Half of physical RAM, capped at 16g, as a Spark memory string."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{min(ram_mb // 2, MAX_DRIVER_MEMORY_MB)}m"
 
 
 def get_spark(
@@ -36,7 +47,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -7,14 +7,17 @@ pruning)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from fulltextsearchengine_spark import oracle
+from fulltextsearchengine_spark.operators import bm25
 from fulltextsearchengine_spark.operators.index_build import build_index
 from fulltextsearchengine_spark.operators.local_query import LocalBM25
 from fulltextsearchengine_spark.operators.posting_blocks import (
     build_posting_blocks,
     blocks_to_postings,
+    decode_block,
 )
 from fulltextsearchengine_spark.operators.search import Searcher
 from fulltextsearchengine_spark.operators.wand import bm25_topk_wand
@@ -47,13 +50,20 @@ def test_block_roundtrip(ctx):
 
 
 def test_block_invariants(ctx):
-    _, _, blocks, _ = ctx
+    _, idx, blocks, stats = ctx
+    avgdl = stats["total_tokens"] / stats["num_docs"]
+    doc_len = {r["doc_id"]: r["doc_len"] for r in idx.docs.select("doc_id", "doc_len").collect()}
     for r in blocks.collect():
         assert 1 <= r["n"] <= BLOCK_SIZE
         assert r["first_doc_id"] <= r["last_doc_id"]
         assert (r["first_doc_id"] - 1) // BUCKET_RANGE == r["bucket"]
         assert (r["last_doc_id"] - 1) // BUCKET_RANGE == r["bucket"]
         assert r["max_impact"] > 0
+        # the build-time bound is exactly the largest tf weight the
+        # serving tiers compute for the block's postings
+        ids, tfs = decode_block(r)
+        dl = np.array([doc_len[int(d)] for d in ids], dtype=np.float64)
+        assert r["max_impact"] == bm25.tf_weight(1.0, tfs, dl, avgdl).max()
 
 
 def test_blocks_ascending_per_term(ctx):
@@ -530,10 +540,8 @@ def test_auto_bucket_range_sizes_to_corpus():
 
 
 def test_non_pow2_bucket_range_falls_back_to_per_bucket_groups(ctx):
-    """r5 review: bucket_range=1000 (not a divisor of the default
-    group_range) must work again — the derived default falls back to
-    one group per bucket; only an EXPLICIT non-nesting group_range
-    raises."""
+    """bucket_range=1000 does not divide the build's group range, so the
+    build groups per bucket; the blocks still round-trip exactly."""
     golden, idx, _, stats = ctx
     avgdl = stats["total_tokens"] / stats["num_docs"]
     blocks = build_posting_blocks(idx.postings, avgdl=avgdl, bucket_range=1000)
@@ -543,7 +551,3 @@ def test_non_pow2_bucket_range_falls_back_to_per_bucket_groups(ctx):
     ):
         got.setdefault(r["term"], []).extend([r["doc_id"], r["tf"]])
     assert got == golden["term_to_postings"]
-    with pytest.raises(ValueError, match="multiple of"):
-        build_posting_blocks(
-            idx.postings, avgdl=avgdl, bucket_range=1000, group_range=4096
-        )
